@@ -10,10 +10,16 @@
 PYTEST ?= python -m pytest
 COMPOSE ?= docker compose
 
-.PHONY: test bench integration integration-local integration-up integration-down
+.PHONY: test test-slow bench integration integration-local integration-up integration-down
 
 test:
 	$(PYTEST) tests/ -x -q
+
+# The heavyweight batteries deselected from the default run (pytest's
+# addopts carries -m 'not slow'); most facade exactly-once replays
+# live here.
+test-slow:
+	$(PYTEST) tests/ -m slow -q
 
 bench:
 	python bench.py

@@ -50,15 +50,27 @@ from python_stream_processing_framework_spark.streaming.windows import WindowSpe
 
 @dataclass
 class _Subscription:
-    kind: str  # "subscribe" | "window"
+    kind: str  # facade method name; run_until_idle calls `_start_{kind}`
     topic: str
-    handler: Callable
-    schema: StructType
+    schema: StructType | None
+    handler: Callable | None = None
     options: dict[str, Any] = field(default_factory=dict)
+    source: str = ""  # checkpoint-name prefix when it is not `topic`
+
+    @property
+    def checkpoint(self) -> str:
+        """`{topic}-{group}` (or `{source}-{group}`): the checkpoint
+        directory name, which the query starter suffixes for companion
+        queries (`--retry`, `--late`)."""
+        return f"{self.source or self.topic}-{self.options['group']}"
 
 
 def _write_batch_jsonl(
-    batch: DataFrame, sink_dir: str, batch_id: int, tag: str = ""
+    batch: DataFrame,
+    sink_dir: str,
+    batch_id: int,
+    tag: str = "",
+    to_line: Callable | None = None,
 ) -> None:
     """Idempotent-per-batch_id distributed JSON-lines sink write.
 
@@ -76,7 +88,11 @@ def _write_batch_jsonl(
 
     JSON encoding parity with `Stream.emit`: one object per line,
     Python json (NaN literals permitted — Spark's reader parses them
-    with its default allowNonNumericNumbers).
+    with its default allowNonNumericNumbers). ``to_line`` overrides how
+    a row becomes its line, e.g. ``lambda row: row["value"]`` for rows
+    that already carry one JSON document (the valkey_live payload
+    column). An empty partition writes no file, so an empty batch
+    leaves the sink untouched.
     """
 
     def write_partition(idx, rows_iter):
@@ -94,36 +110,11 @@ def _write_batch_jsonl(
         for row in rows_iter:
             if out is None:
                 out = open(tmp, "w")
-            out.write(_json.dumps(row.asDict(recursive=True), default=str) + "\n")
-        if out is not None:
-            out.close()
-            os.rename(tmp, os.path.join(sink_dir, name + ".json"))
-        return iter(())
-
-    batch.rdd.mapPartitionsWithIndex(write_partition).count()
-
-
-def _write_batch_value_lines(
-    batch: DataFrame, sink_dir: str, batch_id: int, value_col: str = "value"
-) -> None:
-    """`_write_batch_jsonl`'s sibling for rows that ALREADY carry one
-    JSON document per row in ``value_col`` (the valkey_live source's
-    payload column): each payload string becomes one event line,
-    under the same deterministic per-(batch_id, partition) file name
-    + write-then-rename discipline, so a retried batch overwrites its
-    own files and readers never see a half-written file."""
-
-    def write_partition(idx, rows_iter):
-        import os
-        import uuid as _uuid
-
-        name = f"batch-{batch_id:012d}-p{idx:05d}"
-        tmp = os.path.join(sink_dir, f".{name}.{_uuid.uuid4().hex[:8]}.tmp")
-        out = None
-        for row in rows_iter:
-            if out is None:
-                out = open(tmp, "w")
-            out.write(row[value_col] + "\n")
+            if to_line is None:
+                line = _json.dumps(row.asDict(recursive=True), default=str)
+            else:
+                line = to_line(row)
+            out.write(line + "\n")
         if out is not None:
             out.close()
             os.rename(tmp, os.path.join(sink_dir, name + ".json"))
@@ -186,7 +177,7 @@ class Stream:
         self._claimed: set[tuple[str, str]] = set()  # (topic, group)
         self._claimed_ckpts: set[str] = set()  # derived checkpoint names
 
-    def _claim(self, topic: str, group: str, *, with_retry: bool = False) -> None:
+    def _claim(self, topic: str, group: str, *suffixes: str) -> None:
         """Checkpoint identity = (topic, group): two subscriptions
         sharing it would share a checkpointLocation and corrupt each
         other — fail loudly at registration instead.
@@ -195,16 +186,15 @@ class Stream:
         retry query checkpoints at `{topic}-{group}--retry`, which a
         group literally named `{group}--retry` on the same topic would
         collide with — (topic, group)-pair tracking alone can't see
-        that, so the names themselves are the claim."""
+        that, so the names themselves are the claim. ``suffixes`` names
+        the companion queries' checkpoints (`--retry`, `--late`)."""
         key = (topic, group)
         if key in self._claimed:
             raise ValueError(
                 f"consumer group {group!r} already registered on topic "
                 f"{topic!r}; pass an explicit group= name"
             )
-        ckpts = [f"{topic}-{group}"]
-        if with_retry:
-            ckpts.append(f"{topic}-{group}--retry")
+        ckpts = [f"{topic}-{group}{s}" for s in ("", *suffixes)]
         taken = self._claimed_ckpts.intersection(ckpts)
         if taken:
             raise ValueError(
@@ -214,6 +204,53 @@ class Stream:
             )
         self._claimed.add(key)
         self._claimed_ckpts.update(ckpts)
+
+    def _register(
+        self,
+        kind: str,
+        topic: str,
+        schema: StructType | None,
+        group: str,
+        handler: Callable | None = None,
+        *,
+        source: str = "",
+        suffixes: tuple[str, ...] = (),
+        **options: Any,
+    ) -> None:
+        """Claim the group's checkpoint names and append the
+        subscription; `run_until_idle` starts it with `_start_{kind}`.
+        ``source`` replaces ``topic`` in the checkpoint name when the
+        query does not read the topic (the Valkey ingest bridge)."""
+        self._claim(source or topic, group, *suffixes)
+        self._subscriptions.append(
+            _Subscription(
+                kind, topic, schema, handler, {**options, "group": group}, source
+            )
+        )
+
+    def _start_query(
+        self,
+        df: DataFrame,
+        fn: Callable[[DataFrame, int], None],
+        sub: _Subscription,
+        *,
+        suffix: str = "",
+        output_mode: str | None = None,
+    ):
+        """The one micro-batch skeleton every facade runs on: an
+        availableNow foreachBatch query over ``df``, checkpointed at
+        `{sub.checkpoint}{suffix}`. ``fn`` is the per-batch_id
+        idempotent sink."""
+        writer = df.writeStream.foreachBatch(fn)
+        if output_mode is not None:
+            writer = writer.outputMode(output_mode)
+        return (
+            writer.option(
+                "checkpointLocation", str(self.checkpoints / f"{sub.checkpoint}{suffix}")
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
 
     # ------------------------------------------------------------- produce
     def topic_dir(self, topic: str) -> Path:
@@ -365,24 +402,19 @@ class Stream:
                         "(msg_id, data) form, with IdempotentSink tokens "
                         "for side-effect dedup"
                     )
-            g = group or fn.__name__
             for t in topics:
-                self._claim(t, g, with_retry=True)
-                self._subscriptions.append(
-                    _Subscription(
-                        kind="subscribe",
-                        topic=t,
-                        handler=fn,
-                        schema=schema,
-                        options={
-                            "max_retries": max_retries,
-                            "group": g,
-                            "max_files_per_trigger": max_files_per_trigger,
-                            "distribute": distribute,
-                            "distribute_partitions": distribute_partitions,
-                            "collect_failure_cap": collect_failure_cap,
-                        },
-                    )
+                self._register(
+                    "subscribe",
+                    t,
+                    schema,
+                    group or fn.__name__,
+                    fn,
+                    suffixes=("--retry",),
+                    max_retries=max_retries,
+                    max_files_per_trigger=max_files_per_trigger,
+                    distribute=distribute,
+                    distribute_partitions=distribute_partitions,
+                    collect_failure_cap=collect_failure_cap,
                 )
             return fn
 
@@ -439,28 +471,21 @@ class Stream:
             1 for s in self._subscriptions if s.kind == "window" and s.topic == topic
         )
         suffix = "" if n_windows == 0 else f"-{n_windows}"
-        g = group or f"window-{topic}{suffix}"
-        self._claim(topic, g)
-        if late_topic:  # the companion router gets its own checkpoint
-            self._claim(topic, f"{g}--late")
-        self._subscriptions.append(
-            _Subscription(
-                kind="window",
-                topic=topic,
-                handler=lambda df: df,
-                schema=schema,
-                options={
-                    "window": window,
-                    "key_field": key_field,
-                    "ts_field": ts_field,
-                    "aggs": aggs,
-                    "watermark_delay_ms": watermark_delay_ms,
-                    "sink_topic": sink_topic or f"{topic}-agg{suffix}",
-                    "late_topic": late_topic,
-                    "late_per_window": late_per_window,
-                    "group": g,
-                },
-            )
+        self._register(
+            "window",
+            topic,
+            schema,
+            group or f"window-{topic}{suffix}",
+            # the companion late router gets its own checkpoint
+            suffixes=("--late",) if late_topic else (),
+            window=window,
+            key_field=key_field,
+            ts_field=ts_field,
+            aggs=aggs,
+            watermark_delay_ms=watermark_delay_ms,
+            sink_topic=sink_topic or f"{topic}-agg{suffix}",
+            late_topic=late_topic,
+            late_per_window=late_per_window,
         )
 
     def sessionize(
@@ -494,27 +519,20 @@ class Stream:
         plus `_ts_ms`, `_session_start_ms`, `_session_end_ms` — the
         DLQ `_error`-style metadata convention. Session rows still go
         to `sink_topic` with the unchanged 5-column contract."""
-        g = group or f"session-{topic}"
-        self._claim(topic, g)
-        self._subscriptions.append(
-            _Subscription(
-                kind="sessionize",
-                topic=topic,
-                handler=lambda df: df,
-                schema=schema,
-                options={
-                    "key_field": key_field,
-                    "ts_field": ts_field,
-                    "gap_ms": gap_ms,
-                    "fold": fold,
-                    "init": init,
-                    "watermark_delay_ms": watermark_delay_ms,
-                    "sink_topic": sink_topic or f"{topic}-sessions",
-                    "grace_ms": grace_ms,
-                    "late_topic": late_topic or f"{topic}-late",
-                    "group": g,
-                },
-            )
+        self._register(
+            "sessionize",
+            topic,
+            schema,
+            group or f"session-{topic}",
+            key_field=key_field,
+            ts_field=ts_field,
+            gap_ms=gap_ms,
+            fold=fold,
+            init=init,
+            watermark_delay_ms=watermark_delay_ms,
+            sink_topic=sink_topic or f"{topic}-sessions",
+            grace_ms=grace_ms,
+            late_topic=late_topic or f"{topic}-late",
         )
 
     def pipeline(self, topic: str, schema: StructType, *, group: str | None = None) -> "PipelineBuilder":
@@ -558,22 +576,15 @@ class Stream:
         neither re-delivers nor forgets — including the foreachBatch
         retry window between a sink write and its checkpoint commit.
         """
-        group = group or f"{self.name}-dedupe"
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="dedupe",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "keys": list(keys),
-                    "target": target or f"{topic}-deduped",
-                    "group": group,
-                    "watermark_delay_ms": watermark_delay_ms,
-                    "ts_field": ts_field,
-                },
-            )
+        self._register(
+            "dedupe",
+            topic,
+            schema,
+            group or f"{self.name}-dedupe",
+            keys=list(keys),
+            target=target or f"{topic}-deduped",
+            watermark_delay_ms=watermark_delay_ms,
+            ts_field=ts_field,
         )
 
     def dedupe_near(
@@ -650,30 +661,23 @@ class Stream:
                 f"granularity must be 'doc' or 'paragraph', got {granularity!r}"
             )
         group = group or f"{self.name}-dedupe-near"
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="dedupe_near",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "id_field": id_field,
-                    "text_field": text_field,
-                    "target": target or f"{topic}-unique",
-                    "group": group,
-                    "index_path": index_path
-                    or str(self.broker / "_indexes" / group),
-                    "threshold": threshold,
-                    "num_hashes": num_hashes,
-                    "bands": bands,
-                    "shingle_k": shingle_k,
-                    "max_band_freq": max_band_freq,
-                    "compact_every": compact_every,
-                    "granularity": granularity,
-                    "sep": sep,
-                },
-            )
+        self._register(
+            "dedupe_near",
+            topic,
+            schema,
+            group,
+            id_field=id_field,
+            text_field=text_field,
+            target=target or f"{topic}-unique",
+            index_path=index_path or str(self.broker / "_indexes" / group),
+            threshold=threshold,
+            num_hashes=num_hashes,
+            bands=bands,
+            shingle_k=shingle_k,
+            max_band_freq=max_band_freq,
+            compact_every=compact_every,
+            granularity=granularity,
+            sep=sep,
         )
 
     def dedupe_semantic(
@@ -723,27 +727,20 @@ class Stream:
         capped buckets (SCALE.md "Hot-bucket cap"); off by default.
         """
         group = group or f"{self.name}-dedupe-semantic"
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="dedupe_semantic",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "id_field": id_field,
-                    "vec_field": vec_field,
-                    "target": target or f"{topic}-unique",
-                    "group": group,
-                    "index_path": index_path
-                    or str(self.broker / "_indexes" / group),
-                    "threshold": threshold,
-                    "bands": bands,
-                    "band_bits": band_bits,
-                    "max_band_freq": max_band_freq,
-                    "compact_every": compact_every,
-                },
-            )
+        self._register(
+            "dedupe_semantic",
+            topic,
+            schema,
+            group,
+            id_field=id_field,
+            vec_field=vec_field,
+            target=target or f"{topic}-unique",
+            index_path=index_path or str(self.broker / "_indexes" / group),
+            threshold=threshold,
+            bands=bands,
+            band_bits=band_bits,
+            max_band_freq=max_band_freq,
+            compact_every=compact_every,
         )
 
     def ingest_valkey(
@@ -773,22 +770,15 @@ class Stream:
         event line — the same wire shape `emit` produces. Works
         against a real daemon or the embedded MiniValkeyServer
         (sources/resp.py) alike."""
-        topic = topic or stream_key
-        group = group or f"{self.name}-ingest-{stream_key}"
-        self._claim(f"valkey[{stream_key}]", group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="ingest_valkey",
-                topic=topic,
-                handler=lambda: None,
-                schema=None,
-                options={
-                    "url": url,
-                    "stream_key": stream_key,
-                    "group": group,
-                    "batch_size": batch_size,
-                },
-            )
+        self._register(
+            "ingest_valkey",
+            topic or stream_key,
+            None,
+            group or f"{self.name}-ingest-{stream_key}",
+            source=f"valkey[{stream_key}]",
+            url=url,
+            stream_key=stream_key,
+            batch_size=batch_size,
         )
 
     def deliver_valkey(
@@ -832,25 +822,18 @@ class Stream:
         shard (per-key total order, the partition-key semantic);
         default is content-digest spreading."""
         stream_key = stream_key or topic
-        group = group or f"{self.name}-deliver-{stream_key}"
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="deliver_valkey",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "url": url,
-                    "stream_key": stream_key,
-                    "group": group,
-                    "maxlen": maxlen,
-                    "pipeline_size": pipeline_size,
-                    "exactly_once": exactly_once,
-                    "num_shards": num_shards,
-                    "shard_by": shard_by,
-                },
-            )
+        self._register(
+            "deliver_valkey",
+            topic,
+            schema,
+            group or f"{self.name}-deliver-{stream_key}",
+            url=url,
+            stream_key=stream_key,
+            maxlen=maxlen,
+            pipeline_size=pipeline_size,
+            exactly_once=exactly_once,
+            num_shards=num_shards,
+            shard_by=shard_by,
         )
 
     def decontaminate(
@@ -887,25 +870,17 @@ class Stream:
             bloom_build,
         )
 
-        group = group or f"{self.name}-decontaminate"
-        self._claim(topic, group)
-        words = bloom_build(heldout, text_field, n=n, m_bits=m_bits, k=k)
-        self._subscriptions.append(
-            _Subscription(
-                kind="decontaminate",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "text_field": text_field,
-                    "target": target or f"{topic}-clean",
-                    "flagged": flagged or f"{topic}-contaminated",
-                    "group": group,
-                    "words": words,
-                    "n": n,
-                    "k": k,
-                },
-            )
+        self._register(
+            "decontaminate",
+            topic,
+            schema,
+            group or f"{self.name}-decontaminate",
+            text_field=text_field,
+            target=target or f"{topic}-clean",
+            flagged=flagged or f"{topic}-contaminated",
+            words=bloom_build(heldout, text_field, n=n, m_bits=m_bits, k=k),
+            n=n,
+            k=k,
         )
 
     def decontaminate_semantic(
@@ -960,35 +935,31 @@ class Stream:
         )
 
         group = group or f"{self.name}-decontaminate-semantic"
-        self._claim(topic, group)
         index_path = index_path or str(self.broker / "_indexes" / group)
         sigs_path = f"{index_path}/heldout_sigs"
         sigs = sign_signatures(
             heldout, id_col=id_field, vec_col=vec_field, bands=bands,
             band_bits=band_bits,
         )
+        # claim BEFORE the write: a colliding group must not overwrite
+        # the held-out signatures another subscription reads
+        self._register(
+            "decontaminate_semantic",
+            topic,
+            schema,
+            group,
+            id_field=id_field,
+            vec_field=vec_field,
+            target=target or f"{topic}-clean",
+            flagged=flagged or f"{topic}-contaminated",
+            sigs_path=sigs_path if sigs is not None else None,
+            threshold=threshold,
+            bands=bands,
+            band_bits=band_bits,
+            max_band_freq=max_band_freq,
+        )
         if sigs is not None:
             sigs.write.mode("overwrite").parquet(sigs_path)
-        self._subscriptions.append(
-            _Subscription(
-                kind="decontaminate_semantic",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "id_field": id_field,
-                    "vec_field": vec_field,
-                    "target": target or f"{topic}-clean",
-                    "flagged": flagged or f"{topic}-contaminated",
-                    "group": group,
-                    "sigs_path": sigs_path if sigs is not None else None,
-                    "threshold": threshold,
-                    "bands": bands,
-                    "band_bits": band_bits,
-                    "max_band_freq": max_band_freq,
-                },
-            )
-        )
 
     def _start_decontaminate_semantic(self, sub: _Subscription):
         """Per micro-batch: load the persisted held-out signatures,
@@ -1040,15 +1011,7 @@ class Stream:
             finally:
                 release_caches()
 
-        return (
-            src.writeStream.foreachBatch(split_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, split_batch, sub)
 
     def index_embeddings(
         self,
@@ -1076,21 +1039,14 @@ class Stream:
         (nothing to probe). Rebuild-and-swap to a fresh path when
         batch-dir count or cell drift degrades probes — see
         append_to_ivf_index's lifecycle note."""
-        group = group or f"{self.name}-index-embeddings"
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="index_embeddings",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "index_path": index_path,
-                    "id_field": id_field,
-                    "vec_field": vec_field,
-                    "group": group,
-                },
-            )
+        self._register(
+            "index_embeddings",
+            topic,
+            schema,
+            group or f"{self.name}-index-embeddings",
+            index_path=index_path,
+            id_field=id_field,
+            vec_field=vec_field,
         )
 
     def score_novelty(
@@ -1134,24 +1090,17 @@ class Stream:
         bounded by vocabulary, not sum-of-batch-vocabularies. Set
         ``compact_every=None`` to manage compaction externally."""
         group = group or f"{self.name}-novelty"
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="score_novelty",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "id_field": id_field,
-                    "text_field": text_field,
-                    "n": n,
-                    "target": target or f"{topic}-novelty",
-                    "group": group,
-                    "index_path": index_path
-                    or str(self.broker / "_indexes" / group),
-                    "compact_every": compact_every,
-                },
-            )
+        self._register(
+            "score_novelty",
+            topic,
+            schema,
+            group,
+            id_field=id_field,
+            text_field=text_field,
+            n=n,
+            target=target or f"{topic}-novelty",
+            index_path=index_path or str(self.broker / "_indexes" / group),
+            compact_every=compact_every,
         )
 
     def monitor_drift(
@@ -1255,25 +1204,19 @@ class Stream:
                     f"first time: no reference table under {ref_path}"
                 )
             write_drift_reference(reference, ref_path, text_col=text_field)
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="monitor_drift",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "source_field": source_field,
-                    "text_field": text_field,
-                    "target": drift_target,
-                    "group": group,
-                    "ref_path": ref_path,
-                    "threshold_ppm": threshold_ppm,
-                    "hysteresis": hysteresis,
-                    "alert_target": alert_target,
-                    "edge_only": bool(edge_only),
-                },
-            )
+        self._register(
+            "monitor_drift",
+            topic,
+            schema,
+            group,
+            source_field=source_field,
+            text_field=text_field,
+            target=drift_target,
+            ref_path=ref_path,
+            threshold_ppm=threshold_ppm,
+            hysteresis=hysteresis,
+            alert_target=alert_target,
+            edge_only=bool(edge_only),
         )
 
     def tokenize(
@@ -1384,26 +1327,20 @@ class Stream:
             vocab.withColumn("_tokenizer", F.lit(tokenizer)).withColumn(
                 "_level", F.lit(level)
             ).write.mode("overwrite").parquet(f"{vocab_path}/vocab")
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="tokenize",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "id_field": id_field,
-                    "text_field": text_field,
-                    "target": target or f"{topic}-tokens",
-                    "group": group,
-                    "vocab_path": vocab_path,
-                    "max_piece_len": max_piece_len,
-                    "max_word_len": max_word_len,
-                    "byte_fallback": byte_fallback,
-                    "tokenizer": tokenizer,
-                    "level": level,
-                },
-            )
+        self._register(
+            "tokenize",
+            topic,
+            schema,
+            group,
+            id_field=id_field,
+            text_field=text_field,
+            target=target or f"{topic}-tokens",
+            vocab_path=vocab_path,
+            max_piece_len=max_piece_len,
+            max_word_len=max_word_len,
+            byte_fallback=byte_fallback,
+            tokenizer=tokenizer,
+            level=level,
         )
 
     def classify(
@@ -1454,21 +1391,15 @@ class Stream:
             weights.write.mode("overwrite").parquet(
                 f"{weights_path}/weights"
             )
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="classify",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "id_field": id_field,
-                    "vec_field": vec_field,
-                    "target": target or f"{topic}-classes",
-                    "group": group,
-                    "weights_path": weights_path,
-                },
-            )
+        self._register(
+            "classify",
+            topic,
+            schema,
+            group,
+            id_field=id_field,
+            vec_field=vec_field,
+            target=target or f"{topic}-classes",
+            weights_path=weights_path,
         )
 
     def classify_text(
@@ -1532,23 +1463,17 @@ class Stream:
             model.withColumn("_n", F.lit(int(n))).withColumn(
                 "_n_buckets", F.lit(int(n_buckets))
             ).write.mode("overwrite").parquet(f"{model_path}/model")
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="classify_text",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={
-                    "id_field": id_field,
-                    "text_field": text_field,
-                    "target": target or f"{topic}-textclass",
-                    "group": group,
-                    "model_path": model_path,
-                    "n": int(n),
-                    "n_buckets": int(n_buckets),
-                },
-            )
+        self._register(
+            "classify_text",
+            topic,
+            schema,
+            group,
+            id_field=id_field,
+            text_field=text_field,
+            target=target or f"{topic}-textclass",
+            model_path=model_path,
+            n=int(n),
+            n_buckets=int(n_buckets),
         )
 
     def _start_classify_text(self, sub: _Subscription):
@@ -1594,15 +1519,7 @@ class Stream:
             )
             _write_batch_jsonl(out, sink_dir, batch_id)
 
-        return (
-            src.writeStream.foreachBatch(classify_text_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, classify_text_batch, sub)
 
     def _start_classify(self, sub: _Subscription):
         from python_stream_processing_framework_spark.operators.probe import (
@@ -1647,15 +1564,7 @@ class Stream:
             )
             _write_batch_jsonl(out, sink_dir, batch_id)
 
-        return (
-            src.writeStream.foreachBatch(classify_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, classify_batch, sub)
 
     def _start_tokenize(self, sub: _Subscription):
         from python_stream_processing_framework_spark.operators.unigram import (
@@ -1720,15 +1629,7 @@ class Stream:
             )
             _write_batch_jsonl(counts, sink_dir, batch_id)
 
-        return (
-            src.writeStream.foreachBatch(tokenize_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, tokenize_batch, sub)
 
     def _start_monitor_drift(self, sub: _Subscription):
         from python_stream_processing_framework_spark.operators.text import (
@@ -1766,15 +1667,7 @@ class Stream:
             if o["threshold_ppm"] is not None:
                 self._emit_drift_alerts(o, batch_id)
 
-        return (
-            src.writeStream.foreachBatch(drift_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, drift_batch, sub)
 
     def _emit_drift_alerts(self, o: dict, batch_id: int) -> None:
         """Hysteresis-confirmed drift alerting (monitor_drift with
@@ -1913,15 +1806,7 @@ class Stream:
                     retain_tags=[str(batch_id)],
                 )
 
-        return (
-            src.writeStream.foreachBatch(score_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, score_batch, sub)
 
     def _start_index_embeddings(self, sub: _Subscription):
         from python_stream_processing_framework_spark.operators.ann_index import (
@@ -1943,15 +1828,7 @@ class Stream:
                 vec_col=o["vec_field"],
             )
 
-        return (
-            src.writeStream.foreachBatch(append_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, append_batch, sub)
 
     def _start_ingest_valkey(self, sub: _Subscription):
         """Valkey -> broker bridge: the valkey_live source's
@@ -1968,20 +1845,12 @@ class Stream:
         sink_dir = str(self.topic_dir(sub.topic))
 
         def write_sink(batch: DataFrame, batch_id: int) -> None:
-            _write_batch_value_lines(batch, sink_dir, batch_id)
-
-        return (
-            src.writeStream.foreachBatch(write_sink)
-            .option(
-                "checkpointLocation",
-                str(
-                    self.checkpoints
-                    / f"valkey[{o['stream_key']}]-{o['group']}"
-                ),
+            # each payload already is one event's JSON document
+            _write_batch_jsonl(
+                batch, sink_dir, batch_id, to_line=lambda row: row["value"]
             )
-            .trigger(availableNow=True)
-            .start()
-        )
+
+        return self._start_query(src, write_sink, sub)
 
     def _start_deliver_valkey(self, sub: _Subscription):
         """Broker -> Valkey bridge: pipelined XADD per micro-batch —
@@ -2030,15 +1899,7 @@ class Stream:
                 pipeline_size=o["pipeline_size"],
             )
 
-        return (
-            src.writeStream.foreachBatch(write_sink)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, write_sink, sub)
 
     def _start_decontaminate(self, sub: _Subscription):
         from python_stream_processing_framework_spark.operators.dedup import (
@@ -2073,15 +1934,7 @@ class Stream:
             finally:
                 tagged.unpersist()
 
-        return (
-            src.writeStream.foreachBatch(split_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, split_batch, sub)
 
     def fold(
         self,
@@ -2111,23 +1964,17 @@ class Stream:
         in here unchanged, and their *_from_states reports equal the
         batch funnel_stats / retention_cohorts outputs (pinned in
         tests/test_fold_facade.py)."""
-        group = group or f"{self.name}-fold"
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="fold",
-                topic=topic,
-                handler=fold_fn,
-                schema=schema,
-                options={
-                    "key_field": key_field,
-                    "ts_field": ts_field,
-                    "init": init,
-                    "target": target or f"{topic}-state",
-                    "group": group,
-                    "ttl_ms": ttl_ms,
-                },
-            )
+        self._register(
+            "fold",
+            topic,
+            schema,
+            group or f"{self.name}-fold",
+            fold_fn,
+            key_field=key_field,
+            ts_field=ts_field,
+            init=init,
+            target=target or f"{topic}-state",
+            ttl_ms=ttl_ms,
         )
 
     def read_fold_states(self, topic: str, key_field: str, key_type=None):
@@ -2166,24 +2013,13 @@ class Stream:
         sink_dir = str(self.topic_dir(o["target"]))
 
         def write_states(batch: DataFrame, batch_id: int) -> None:
-            if batch.isEmpty():
-                return
             _write_batch_jsonl(
                 batch.withColumn("_batch_id", F.lit(batch_id).cast("long")),
                 sink_dir,
                 batch_id,
             )
 
-        return (
-            folded.writeStream.foreachBatch(write_states)
-            .outputMode("update")
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(folded, write_states, sub, output_mode="update")
 
     def route(
         self,
@@ -2204,16 +2040,8 @@ class Stream:
         Unroutable events are dropped, like the reference
         (pspf/topology.py:40-46).
         """
-        group = group or f"{self.name}-route"
-        self._claim(topic, group)
-        self._subscriptions.append(
-            _Subscription(
-                kind="route",
-                topic=topic,
-                handler=lambda: None,
-                schema=schema,
-                options={"router": router, "group": group},
-            )
+        self._register(
+            "route", topic, schema, group or f"{self.name}-route", router=router
         )
 
     # ------------------------------------------------------------- running
@@ -2282,15 +2110,7 @@ class Stream:
                 sub.schema,
                 max_files_per_trigger=sub.options.get("max_files_per_trigger"),
             )
-            queries.append(
-                src.writeStream.foreachBatch(process)
-                .option(
-                    "checkpointLocation",
-                    str(self.checkpoints / f"{sub.topic}-{group}{suffix}"),
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
+            queries.append(self._start_query(src, process, sub, suffix=suffix))
         return queries
 
     def _start_window(self, sub: _Subscription):
@@ -2313,30 +2133,23 @@ class Stream:
                 *[F.col(n) for n in opts["aggs"]],
             )
         )
-        sink_dir = self.topic_dir(opts["sink_topic"])
+        sink_dir = str(self.topic_dir(opts["sink_topic"]))
         mode = "complete" if not delay_ms else "append"
 
         def write_agg(batch: DataFrame, batch_id: int) -> None:
             # Distributed write — the aggregate never visits the driver:
             # at 100 TB a user_id x window result is not driver-sized.
-            # complete mode re-emits the full result: distributed
-            # overwrite replaces the sink dir atomically per batch.
-            if batch.isEmpty():
-                return
-            batch.write.mode("overwrite" if mode == "complete" else "append").json(
-                str(sink_dir)
-            )
+            if mode == "complete":
+                # complete mode re-emits the full result: distributed
+                # overwrite replaces the sink dir atomically per batch.
+                batch.write.mode("overwrite").json(sink_dir)
+            else:
+                # append mode emits each finalized window once; the
+                # per-batch_id file names make a retry overwrite its
+                # own rows (a plain append would duplicate them)
+                _write_batch_jsonl(batch, sink_dir, batch_id)
 
-        agg_q = (
-            agged.writeStream.foreachBatch(write_agg)
-            .outputMode(mode)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{opts['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        agg_q = self._start_query(agged, write_agg, sub, output_mode=mode)
         if not opts.get("late_topic"):
             return agg_q
         return [agg_q, self._start_late_router(sub)]
@@ -2364,12 +2177,11 @@ class Stream:
         spec: WindowSpec = opts["window"]
         ts = opts["ts_field"]
         delay_ms = opts["watermark_delay_ms"]
-        g = f"{opts['group']}--late"
         src = self.stream_topic(sub.topic, sub.schema).withColumn(
             "_ts_ms", F.unix_millis(F.col(ts).cast("timestamp"))
         )
         late_dir = str(self.topic_dir(opts["late_topic"]))
-        wm_path = self.checkpoints / f"{sub.topic}-{g}-wm.json"
+        wm_path = self.checkpoints / f"{sub.checkpoint}--late-wm.json"
 
         per_window = bool(opts.get("late_per_window"))
 
@@ -2423,15 +2235,7 @@ class Stream:
             finally:
                 batch.unpersist()
 
-        return (
-            src.writeStream.foreachBatch(route_late)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{g}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, route_late, sub, suffix="--late")
 
     def _start_sessionize(self, sub: _Subscription):
         from python_stream_processing_framework_spark.streaming.sessions import (
@@ -2462,9 +2266,9 @@ class Stream:
         def write_sessions(batch: DataFrame, batch_id: int) -> None:
             # Distributed + idempotent per batch_id, like the other
             # facade sinks: a foreachBatch retry rewrites its own files.
+            # No emptiness check first: on this stateful plan it would
+            # run the micro-batch twice, and an empty batch writes no file.
             if grace_ms is None:
-                if batch.isEmpty():
-                    return
                 _write_batch_jsonl(batch, sink_dir, batch_id)
                 return
             # grace mode: split the kind discriminator — sessions keep
@@ -2502,16 +2306,7 @@ class Stream:
             finally:
                 batch.unpersist()
 
-        return (
-            sessions.writeStream.foreachBatch(write_sessions)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{opts['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(sessions, write_sessions, sub, output_mode="append")
 
     def _start_pipeline(self, sub: _Subscription):
         """Pure map/filter transforms run EXECUTOR-side (Arrow-batched
@@ -2581,15 +2376,7 @@ class Stream:
             # retry overwrites its own files instead of appending.
             _write_batch_jsonl(batch, sink_dir, batch_id)
 
-        return (
-            transformed.writeStream.foreachBatch(write_sink)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{sub.options['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(transformed, write_sink, sub)
 
     def _start_route(self, sub: _Subscription):
         """Router fan-out: tag once, write each route's subset
@@ -2617,15 +2404,7 @@ class Stream:
             finally:
                 batch.unpersist()
 
-        return (
-            tagged.writeStream.foreachBatch(write_routes)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{sub.options['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(tagged, write_routes, sub)
 
     def _start_dedupe(self, sub: _Subscription):
         """First-occurrence dedup into the target topic. The dedup
@@ -2652,15 +2431,7 @@ class Stream:
             # idempotent per batch_id — see _write_batch_jsonl
             _write_batch_jsonl(batch, sink_dir, batch_id)
 
-        return (
-            deduped.writeStream.foreachBatch(write_sink)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{sub.options['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(deduped, write_sink, sub)
 
     def _start_dedupe_near(self, sub: _Subscription):
         """Near-dup admission per micro-batch: the foreachBatch body
@@ -2728,15 +2499,7 @@ class Stream:
             finally:
                 release_caches()
 
-        return (
-            src.writeStream.foreachBatch(admit_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, admit_batch, sub)
 
     def _start_dedupe_semantic(self, sub: _Subscription):
         """Semantic near-dup admission per micro-batch: foreachBatch
@@ -2785,46 +2548,18 @@ class Stream:
             finally:
                 release_caches()
 
-        return (
-            src.writeStream.foreachBatch(admit_batch)
-            .option(
-                "checkpointLocation",
-                str(self.checkpoints / f"{sub.topic}-{o['group']}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._start_query(src, admit_batch, sub)
 
     def run_until_idle(self, *, rounds: int = 1) -> None:
         """Start every registered pipeline against the data currently in
         the broker and block until all of it is processed — the test /
         batch stand-in for `run_forever()`. `rounds` > 1 re-runs to
         drain messages that handlers re-emitted (retries)."""
-        starters = {
-            "subscribe": self._start_subscribe,
-            "window": self._start_window,
-            "pipeline": self._start_pipeline,
-            "sessionize": self._start_sessionize,
-            "route": self._start_route,
-            "dedupe": self._start_dedupe,
-            "dedupe_near": self._start_dedupe_near,
-            "dedupe_semantic": self._start_dedupe_semantic,
-            "fold": self._start_fold,
-            "decontaminate": self._start_decontaminate,
-            "decontaminate_semantic": self._start_decontaminate_semantic,
-            "ingest_valkey": self._start_ingest_valkey,
-            "deliver_valkey": self._start_deliver_valkey,
-            "index_embeddings": self._start_index_embeddings,
-            "score_novelty": self._start_score_novelty,
-            "monitor_drift": self._start_monitor_drift,
-            "tokenize": self._start_tokenize,
-            "classify": self._start_classify,
-            "classify_text": self._start_classify_text,
-        }
         for _ in range(max(1, rounds)):
             queries = []
             for sub in self._subscriptions:
-                started = self._with_state_width(starters[sub.kind], sub)
+                starter = getattr(self, f"_start_{sub.kind}")
+                started = self._with_state_width(starter, sub)
                 queries.extend(started if isinstance(started, list) else [started])
             for q in queries:
                 q.awaitTermination()
@@ -2885,19 +2620,12 @@ class PipelineBuilder:
         silently — the reference's StreamBuilder emitted arbitrary
         dicts (pspf/processing/dsl.py:31-49), so a shape-changing map
         here requires declaring the new shape."""
-        g = self._group or f"pipe-{self._topic}-{target_topic}"
-        self._stream._claim(self._topic, g)
-        self._stream._subscriptions.append(
-            _Subscription(
-                kind="pipeline",
-                topic=self._topic,
-                handler=lambda e: e,
-                schema=self._schema,
-                options={
-                    "ops": list(self._ops),
-                    "target": target_topic,
-                    "group": g,
-                    "out_schema": output_schema,
-                },
-            )
+        self._stream._register(
+            "pipeline",
+            self._topic,
+            self._schema,
+            self._group or f"pipe-{self._topic}-{target_topic}",
+            ops=list(self._ops),
+            target=target_topic,
+            out_schema=output_schema,
         )

@@ -413,35 +413,48 @@ def test_replay_distributed_partition_files(spark, tmp_path):
 def test_write_batch_jsonl_idempotent_per_batch_id(spark, tmp_path):
     """foreachBatch is at-least-once: a crash between sink write and
     checkpoint commit re-runs the SAME batch_id. The facade sink must
-    overwrite its own files on that retry, not append duplicates."""
+    overwrite its own files on that retry, not append duplicates —
+    for plain rows and for rows that already carry one JSON document
+    in a value column (the Valkey ingest bridge's ``to_line``)."""
+    import json as _json
+
     from python_stream_processing_framework_spark.streaming.stream import (
         _write_batch_jsonl,
     )
 
-    df = spark.createDataFrame(
-        [("a", 1), ("b", 2), ("c", 3), ("d", 4)], ["k", "v"]
-    ).repartition(2, "k")
-    d = tmp_path / "topic"
-    d.mkdir()
+    def as_values(rows):
+        return [(_json.dumps({"k": k, "v": v}),) for k, v in rows]
 
-    def rows():
-        return sorted(
-            (r["k"], r["v"])
-            for r in spark.read.json(str(d)).collect()
-        )
+    first = [("a", 1), ("b", 2), ("c", 3), ("d", 4)]
+    cases = {
+        "rows": (lambda rows: spark.createDataFrame(rows, ["k", "v"]), None),
+        "value": (
+            lambda rows: spark.createDataFrame(as_values(rows), ["value"]),
+            lambda row: row["value"],
+        ),
+    }
+    for name, (make, to_line) in cases.items():
+        df = make(first).repartition(2)
+        d = tmp_path / name
+        d.mkdir()
 
-    _write_batch_jsonl(df, str(d), 7)
-    names_first = sorted(p.name for p in d.glob("*.json"))
-    assert rows() == [("a", 1), ("b", 2), ("c", 3), ("d", 4)]
-    # simulated foreachBatch retry of batch 7: same files, same rows
-    _write_batch_jsonl(df, str(d), 7)
-    assert sorted(p.name for p in d.glob("*.json")) == names_first
-    assert rows() == [("a", 1), ("b", 2), ("c", 3), ("d", 4)]
-    # a NEW batch id appends
-    df2 = spark.createDataFrame([("e", 5)], ["k", "v"])
-    _write_batch_jsonl(df2, str(d), 8)
-    assert rows() == [("a", 1), ("b", 2), ("c", 3), ("d", 4), ("e", 5)]
-    assert not list(d.glob(".*.tmp"))
+        def rows():
+            return sorted(
+                (r["k"], r["v"])
+                for r in spark.read.json(str(d)).collect()
+            )
+
+        _write_batch_jsonl(df, str(d), 7, to_line=to_line)
+        names_first = sorted(p.name for p in d.glob("*.json"))
+        assert rows() == first
+        # simulated foreachBatch retry of batch 7: same files, same rows
+        _write_batch_jsonl(df, str(d), 7, to_line=to_line)
+        assert sorted(p.name for p in d.glob("*.json")) == names_first
+        assert rows() == first
+        # a NEW batch id appends
+        _write_batch_jsonl(make([("e", 5)]), str(d), 8, to_line=to_line)
+        assert rows() == first + [("e", 5)]
+        assert not list(d.glob(".*.tmp"))
 
 
 def test_pipeline_dsl_map_filter_sink(spark, stream):
@@ -602,6 +615,75 @@ def test_windowed_agg_with_watermark_append_mode(spark, stream):
     }
     assert out2[("u", 0)] == (5.0, 1)  # unchanged
     assert out2[("u", 100_000_000)] == (1.0, 1)  # [100,110) finalized by 200s
+
+
+def test_window_append_retry_rewrites_not_duplicates(spark, stream):
+    """A crash between the window sink write and the checkpoint commit
+    re-runs that batch_id. Append mode must rewrite the batch's own
+    files, so the finalized window is still delivered exactly once."""
+    stream.window(
+        "wm",
+        TumblingWindow(10_000),
+        EVENT_SCHEMA,
+        key_field="key",
+        aggs={"total": F.sum("value"), "n": F.count(F.lit(1))},
+        watermark_delay_ms=5_000,
+    )
+    stream.emit(
+        "wm",
+        {"key": "u", "timestamp": 1.0, "value": 5.0},
+        {"key": "u", "timestamp": 100.0, "value": 1.0},
+    )
+    stream.run_until_idle()
+    # forget the last commit: the next run re-executes that batch, the
+    # one that finalized [0,10)
+    commits = stream.checkpoints / "wm-window-wm" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink(missing_ok=True)
+    stream.run_until_idle()
+    rows = [
+        (r["key"], r["win_start_us"], r["total"], r["n"])
+        for r in stream.read_topic("wm-agg", AGG_SCHEMA).collect()
+    ]
+    assert rows == [("u", 0, 5.0, 1)]
+
+
+@pytest.mark.parametrize("facade", ["sessionize", "fold"])
+def test_each_event_reaches_the_fold_once(spark, stream, tmp_path, facade):
+    """The stateful facades run their fold once per event: the sink
+    must not execute the stateful micro-batch a second time (e.g. an
+    emptiness check before the write)."""
+    log = str(tmp_path / "fold-calls.log")
+
+    def make_fold(path):
+        # local function: cloudpickle ships it by value to executors
+        def fold(event, state):
+            with open(path, "a") as fh:
+                fh.write("call\n")
+            return (state or 0.0) + float(event["value"])
+
+        return fold
+
+    if facade == "sessionize":
+        stream.sessionize(
+            "f", EVENT_SCHEMA, key_field="key", gap_ms=5_000, fold=make_fold(log)
+        )
+    else:
+        stream.fold(
+            "f", EVENT_SCHEMA, make_fold(log), key_field="key", ts_field="timestamp"
+        )
+    n = 0
+    for file_no in range(3):
+        events = [
+            {"key": f"k{i % 12}", "timestamp": 1000.0 + 100 * file_no + i, "value": 1.0}
+            for i in range(40)
+        ]
+        stream.emit("f", *events)
+        n += len(events)
+    stream.run_until_idle()
+    with open(log) as fh:
+        assert len(fh.readlines()) == n
 
 
 def test_window_late_topic_routes_instead_of_silent_drop(spark, stream):
