@@ -10,7 +10,7 @@
 PYTEST ?= python -m pytest
 COMPOSE ?= docker compose
 
-.PHONY: test test-slow bench integration integration-local integration-up integration-down
+.PHONY: test test-slow bench loc integration integration-local integration-up integration-down
 
 test:
 	$(PYTEST) tests/ -x -q
@@ -23,6 +23,14 @@ test-slow:
 
 bench:
 	python bench.py
+
+# The three line counts the roadmap tracks: every package *.py file,
+# the streaming facade module, and the bench driver.
+PKG := python_stream_processing_framework_spark
+loc:
+	@printf '%-22s %6s\n' package "$$(find $(PKG) -name '*.py' -exec cat {} + | wc -l)"
+	@printf '%-22s %6s\n' streaming/stream.py "$$(wc -l < $(PKG)/streaming/stream.py)"
+	@printf '%-22s %6s\n' bench.py "$$(wc -l < bench.py)"
 
 integration-up:
 	$(COMPOSE) up -d --wait valkey kafka

@@ -23,11 +23,6 @@ def as_double_array(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def _fold_sum(arr: Column) -> Column:
-    """Sequential left-fold sum: ((0 + x1) + x2) + ..."""
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<double> columns.
 

@@ -192,15 +192,18 @@ def charclf_train(
         F.sum("nd").alias("n"),
         F.sum(F.when(F.col("label").isNull(), F.col("nd"))).alias("n_null"),
     ).head()
-    if stats["n_null"]:
+    n_docs = stats["n"] or 0
+    if stats["n_null"] or n_docs == 0:
+        # refused input releases the caches this call filled
+        counts.unpersist()
+        doc_counts.unpersist()
         raise ValueError(
             "charclf_train: NULL labels in the training frame — "
             "filter or impute upstream (a dropped doc moves every "
             "class prior)"
+            if stats["n_null"]
+            else "charclf_train: empty training frame"
         )
-    n_docs = stats["n"] or 0
-    if n_docs == 0:
-        raise ValueError("charclf_train: empty training frame")
     # dense (observed bucket) x (label) grid: a bucket one class saw
     # must carry every OTHER class's smoothed zero-count weight too,
     # or serving would need per-label unseen fallbacks bucket-wise

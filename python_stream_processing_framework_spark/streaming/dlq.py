@@ -41,16 +41,19 @@ from python_stream_processing_framework_spark.streaming.context import Context
 logger = logging.getLogger("pspf_spark.reliability")
 
 
+def _positional_arity(fn: Callable) -> int:
+    """Number of positional parameters ``fn`` declares."""
+    return sum(
+        p.kind
+        in (inspect.Parameter.POSITIONAL_ONLY, inspect.Parameter.POSITIONAL_OR_KEYWORD)
+        for p in inspect.signature(fn).parameters.values()
+    )
+
+
 def _arity_call(handler: Callable, ctx: Context | None):
     """Arity-sniffed dispatch (reference pspf/stream.py:286-323):
     `(event)` | `(msg_id, data)` | `(msg_id, data, ctx)`."""
-    positional = [
-        p
-        for p in inspect.signature(handler).parameters.values()
-        if p.kind
-        in (inspect.Parameter.POSITIONAL_ONLY, inspect.Parameter.POSITIONAL_OR_KEYWORD)
-    ]
-    n = len(positional)
+    n = _positional_arity(handler)
     if n >= 3:
         return lambda ev: handler(ev.get("event_id"), ev, ctx)
     if n == 2:
@@ -407,14 +410,3 @@ class IdempotentSink:
 
     def on_write(self, event: dict, token: str) -> None:  # pragma: no cover
         raise NotImplementedError
-
-
-def dedupe_against_tokens(
-    batch: DataFrame, token_table: DataFrame | None, id_col: str
-) -> DataFrame:
-    """Batch-level idempotence for DataFrame sinks: anti-join the
-    micro-batch against the already-committed id set (the scalable
-    shape of IdempotentSink for `foreachBatch` writers)."""
-    if token_table is None:
-        return batch
-    return batch.join(token_table, on=id_col, how="left_anti")

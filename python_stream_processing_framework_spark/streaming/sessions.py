@@ -10,29 +10,17 @@ EMIT as soon as the event-time watermark passes `last_event + gap`,
 with state managed by Spark's state store (exactly-once with the query
 checkpoint, survives restarts).
 
-Two implementations, same semantics; `sessionize_stream` is CANONICAL:
+One implementation, `sessionize_stream`, on `applyInPandasWithState` +
+`GroupStateTimeout.EventTimeTimeout`: a per-key event-time timer at
+`last + gap` fires when the watermark passes it and flushes the open
+session. It needs Arrow only, on any Spark 3.4+/4.x. Both modes run
+the same gap-merge + fold core, `_fold_batch`.
 
-- `sessionize_stream` (canonical — what the facade's session sink and
-  all e2e tests run) — `applyInPandasWithState` +
-  `GroupStateTimeout.EventTimeTimeout`: a per-key event-time timer at
-  `last + gap` fires when the watermark passes it and flushes the open
-  session. Works on any Spark 3.4+/4.x with Arrow only — no extra
-  deps, which is why it is the default.
-- `sessionize_stream_tws` (compat / forward path) — the Spark 4
-  `transformWithStateInPandas` StatefulProcessor form (typed value
-  state + named event-time timers). The TWS Python worker needs
-  `google.protobuf` and the RocksDB state-store provider; the function
-  raises a clear error when either is missing, so environments without
-  protobuf fall back to `sessionize_stream` (identical output).
+Plain mode (`grace_ms=None`) emits the 5-column session contract.
 
-Both share `_fold_batch` — the gap-merge + fold core is literally one
-function, so the two paths cannot drift semantically; the TWS e2e
-equivalence test (tests/test_sessions.py) is protobuf-gated like the
-live-broker tests.
-
-Late-data capture (SURVEY hard part #3, the `grace_ms` mode of BOTH
-functions): the reference routes events behind the watermark to a
-`{topic}-late` DLQ (pspf/stream.py:402-413) — but it does so BEFORE
+Grace mode (`grace_ms`, SURVEY hard part #3, `_sessionize_grace`) adds
+attributed late-data capture. The reference routes events behind the
+watermark to a `{topic}-late` DLQ (pspf/stream.py:402-413), but before
 session attribution exists. Here a closed session leaves a TOMBSTONE
 (its boundaries) in state for a grace window after close; a straggler
 arriving inside that window is emitted as a `kind='late'` row carrying
@@ -40,27 +28,25 @@ the session it belonged to, instead of being silently dropped by
 Spark's stateful late-row filter. Mechanically: the Spark watermark is
 delayed by an extra `grace_ms` (so stragglers survive the built-in
 filter), sessions still close at the UNDELAYED business watermark by
-registering the close timer `grace_ms` early (`last + gap - grace` in
+setting the close boundary `grace_ms` early (`last + gap - grace` in
 delayed-watermark coordinates = `last + gap` in business time), and a
 second boundary at `last + gap` garbage-collects the tombstone exactly
 when the delayed watermark guarantees no matching straggler can still
-arrive. The TWS form holds the two boundaries as two NAMED timers —
-the expressiveness named timers exist for; the canonical form emulates
-them with one timeout slot set to the earliest pending boundary and
-re-armed on fire. Output schema changes in grace mode (a `kind`
-discriminator + `ts_ms` + `payload_json`); with `grace_ms=None` both
-functions emit the original 5-column contract unchanged. A straggler
-matching no tombstone that arrives behind an OPEN session (more than
-gap before its start) is captured with NULL session boundaries — see
+arrive. The one timeout slot per key is set to the earliest pending
+boundary and re-armed on fire. The output schema gains a `kind`
+discriminator + `ts_ms` + `payload_json`. A straggler matching no
+tombstone that arrives behind an OPEN session (more than gap before
+its start) is captured with NULL session boundaries — see
 `_split_orphans` for why folding it would corrupt the open session.
 
-Scale shape (both): one shuffle on the key into the stateful exchange;
-state per key is O(1) (the active session's fold accumulator, not the
-event list); closed sessions flow straight to the sink — nothing ever
-gathers on the driver. Late events older than the watermark are dropped
-by Spark's stateful late-row filter BEFORE reaching the fold (note:
-the filter also catches an event at exactly epoch 0 against the
-initial watermark 0ms) — pair with the facade's late-split
+Scale shape (both modes): one shuffle on the key into the stateful
+exchange; state per key is O(1) (the active session's fold
+accumulator, not the event list); closed sessions flow straight to the
+sink — nothing ever gathers on the driver. Late events older than the
+watermark are dropped by Spark's stateful late-row filter BEFORE
+reaching the fold (note: the filter also catches an event at exactly
+the initial watermark, e.g. epoch 0 with a 0 ms delay; see
+docs/streaming.md § Sessions) — pair with the facade's late-split
 (`operators/windows.split_late`) upstream for the reference's `-late`
 DLQ capture semantics instead of a silent drop.
 """
@@ -81,19 +67,6 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 FoldFn = Callable[[dict, Any], Any]
 
 _STATE_SCHEMA = "start_ms long, last_ms long, n long, state_json string"
-
-try:  # TWS needs the protobuf-backed state client (import-gated per brief)
-    import google.protobuf  # noqa: F401
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    HAS_TWS = True
-except ImportError:  # pragma: no cover - exercised where protobuf exists
-    HAS_TWS = False
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
 
 def _out_schema(df: DataFrame, key_col: str) -> StructType:
     return StructType(
@@ -473,236 +446,4 @@ def _sessionize_grace(
 
     return src.groupBy(key_col).applyInPandasWithState(
         run, out, _GRACE_STATE_SCHEMA, "append", GroupStateTimeout.EventTimeTimeout
-    )
-
-
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def sessionize_stream_tws(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    gap_ms: int,
-    fold: FoldFn,
-    init: Any = None,
-    *,
-    watermark_delay: str | None = None,
-    grace_ms: int | None = None,
-) -> DataFrame:
-    """`sessionize_stream` on Spark 4's transformWithStateInPandas:
-    typed value state + named event-time timers instead of the single
-    flatMapGroupsWithState timeout slot. Identical output contract —
-    including `grace_ms` attributed late capture, where the two grace
-    boundaries (session close, tombstone GC) are held as two REAL
-    timers per key instead of the canonical path's re-armed single
-    slot (the expressiveness named timers exist for).
-
-    Requires `google.protobuf` (the TWS Python state client's wire
-    format) and the RocksDB state-store provider
-    (`spark.sql.streaming.stateStore.providerClass`); raises
-    RuntimeError naming whichever is missing.
-    """
-    grace_ms = grace_ms or None  # 0 = no grace window = plain mode
-    if grace_ms is not None and watermark_delay is None:
-        raise ValueError("grace_ms requires watermark_delay")
-    if not HAS_TWS:
-        raise RuntimeError(
-            "transformWithStateInPandas needs the 'protobuf' package for its "
-            "Python state client; pip install protobuf or use "
-            "sessionize_stream() (same semantics, no extra deps)"
-        )
-    provider = df.sparkSession.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    )
-    if "RocksDB" not in (provider or ""):
-        raise RuntimeError(
-            "transformWithStateInPandas requires the RocksDB state store: "
-            f'spark.conf.set("spark.sql.streaming.stateStore.providerClass", '
-            f'"{_ROCKSDB_PROVIDER}")'
-        )
-
-    if grace_ms is not None:
-        return _sessionize_grace_tws(
-            df, key_col, ts_col, gap_ms, fold, init,
-            watermark_delay=watermark_delay, grace_ms=grace_ms,
-        )
-    out = _out_schema(df, key_col)
-    src = _with_ts_ms(df, ts_col, watermark_delay)
-
-    class _Sessionizer(StatefulProcessor):
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._handle = handle
-            self._sess = handle.getValueState("sess", _STATE_SCHEMA)
-
-        def _emit(self, key: Any, start: int, last: int, n: int, st: Any):
-            return pd.DataFrame(
-                {
-                    key_col: [key],
-                    "session_start_ms": [start],
-                    "session_end_ms": [last + gap_ms],
-                    "n_events": [n],
-                    "state_json": [json.dumps(st)],
-                }
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            cur = self._sess.get()
-            if cur is not None:
-                start, last, n, st_json = cur
-                st = json.loads(st_json)
-            else:
-                start = last = n = None
-                st = None
-            events = pd.concat(list(rows), ignore_index=True)
-            closed, start, last, n, st = _fold_batch(
-                events, "_ts_ms", fold, init, start, last, n, st, gap_ms
-            )
-            self._sess.update((start, last, n, json.dumps(st)))
-            for t_old in self._handle.listTimers():
-                self._handle.deleteTimer(t_old)
-            self._handle.registerTimer(
-                max(last + gap_ms, timerValues.getCurrentWatermarkInMs() + 1)
-            )
-            for c in closed:
-                yield self._emit(key[0], *c)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            cur = self._sess.get()
-            if cur is not None:
-                start, last, n, st_json = cur
-                if expiredTimerInfo.getExpiryTimeInMs() >= last + gap_ms:
-                    self._sess.clear()
-                    yield self._emit(key[0], start, last, n, json.loads(st_json))
-
-        def close(self) -> None:
-            pass
-
-    return src.groupBy(key_col).transformWithStateInPandas(
-        _Sessionizer(), out, "Append", "EventTime"
-    )
-
-
-def _sessionize_grace_tws(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    gap_ms: int,
-    fold: FoldFn,
-    init: Any,
-    *,
-    watermark_delay: str,
-    grace_ms: int,
-) -> DataFrame:
-    """TWS grace mode: same semantics as `_sessionize_grace` (shared
-    `_fold_batch` / `_split_stragglers` core, so the two paths cannot
-    drift), with the two pending boundaries held as two NAMED timers —
-    close at `last + gap - grace`, tombstone GC at `last + gap`, both
-    in grace-delayed watermark coordinates. `handleExpiredTimer`
-    branches on state against the watermark, not on which timer
-    object fired, so a clamped-forward timer is handled identically."""
-    out = _out_schema_grace(df, key_col)
-    delay_ms = _delay_to_ms(watermark_delay) + grace_ms
-    src = _with_ts_ms(df, ts_col, f"{delay_ms} milliseconds")
-    _OPEN_SCHEMA = "start_ms long, last_ms long, n long, state_json string"
-    _TOMB_SCHEMA = "start_ms long, last_ms long, n long"
-
-    class _GraceSessionizer(StatefulProcessor):
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._handle = handle
-            self._sess = handle.getValueState("sess", _OPEN_SCHEMA)
-            self._tomb = handle.getValueState("tomb", _TOMB_SCHEMA)
-
-        def _row(self, key, kind, start, end, n, ts_ms, payload):
-            # nullable Int64 throughout: ts_ms is null on session rows,
-            # the session columns are null on unattributed late rows
-            return pd.DataFrame(
-                {
-                    key_col: [key],
-                    "kind": [kind],
-                    "session_start_ms": pd.array([start], dtype="Int64"),
-                    "session_end_ms": pd.array([end], dtype="Int64"),
-                    "n_events": pd.array([n], dtype="Int64"),
-                    "ts_ms": pd.array([ts_ms], dtype="Int64"),
-                    "payload_json": [payload],
-                }
-            )
-
-        def _session_row(self, key, start, last, n, st):
-            return self._row(
-                key, "session", start, last + gap_ms, n, None, json.dumps(st)
-            )
-
-        def _sync_timers(self, wm: int) -> None:
-            cur = self._sess.get()
-            tomb = self._tomb.get()
-            want = set()
-            if cur is not None:
-                want.add(max(cur[1] + gap_ms - grace_ms, wm + 1))
-            if tomb is not None:
-                want.add(max(tomb[1] + gap_ms, wm + 1))
-            have = set(self._handle.listTimers())
-            for t in have - want:
-                self._handle.deleteTimer(t)
-            for t in want - have:
-                self._handle.registerTimer(t)
-
-        def handleInputRows(self, key, rows, timerValues):
-            wm = timerValues.getCurrentWatermarkInMs()
-            cur = self._sess.get()
-            if cur is not None:
-                start, last, n, st_json = cur
-                st = json.loads(st_json)
-            else:
-                start = last = n = None
-                st = None
-            tomb = self._tomb.get()
-            c_start, c_last = (tomb[0], tomb[1]) if tomb is not None else (None, None)
-
-            events = pd.concat(list(rows), ignore_index=True)
-            stragglers, rest = _split_stragglers(events, c_start, c_last, gap_ms)
-            for ev in stragglers.sort_values("_ts_ms").to_dict("records"):
-                yield self._row(
-                    key[0], "late", c_start, c_last + gap_ms, 1,
-                    int(ev["_ts_ms"]), _late_payload(ev),
-                )
-            orphans, rest = _split_orphans(rest, start, gap_ms)
-            for ev in orphans.sort_values("_ts_ms").to_dict("records"):
-                yield self._row(
-                    key[0], "late", None, None, 1,
-                    int(ev["_ts_ms"]), _late_payload(ev),
-                )
-            closed, start, last, n, st = _fold_batch(
-                rest, "_ts_ms", fold, init, start, last, n, st, gap_ms
-            )
-            for c in closed:
-                yield self._session_row(key[0], *c)
-            if closed:
-                self._tomb.update((closed[-1][0], closed[-1][1], closed[-1][2]))
-            if last is not None:
-                self._sess.update((start, last, n, json.dumps(st)))
-            self._sync_timers(wm)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            wm = timerValues.getCurrentWatermarkInMs()
-            tomb = self._tomb.get()
-            # Strict >, matching the applyInPandasWithState path: an event
-            # with ts == tomb_last+gap is still admitted at wm == that value.
-            if tomb is not None and wm > tomb[1] + gap_ms:
-                self._tomb.clear()
-            cur = self._sess.get()
-            if cur is not None and wm >= cur[1] + gap_ms - grace_ms:
-                start, last, n, st_json = cur
-                self._sess.clear()
-                self._tomb.update((start, last, n))
-                yield self._session_row(key[0], start, last, n, json.loads(st_json))
-            self._sync_timers(wm)
-
-        def close(self) -> None:
-            pass
-
-    return src.groupBy(key_col).transformWithStateInPandas(
-        _GraceSessionizer(), out, "Append", "EventTime"
     )

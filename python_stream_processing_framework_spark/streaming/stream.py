@@ -43,9 +43,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from python_stream_processing_framework_spark.streaming.dlq import (
+    _positional_arity,
     handle_batch_with_retries,
 )
 from python_stream_processing_framework_spark.streaming.windows import WindowSpec
+
+
+#: knob values of a write-once table that predates the knob's stamp
+#: column: pre-r13 vocabularies carry no stamps and are unigram, char
+_UNSTAMPED = {"tokenizer": "unigram", "level": "char"}
 
 
 @dataclass
@@ -228,6 +234,56 @@ class Stream:
             )
         )
 
+    def _write_once(
+        self,
+        path: str,
+        data: DataFrame | None,
+        needs: str,
+        write: Callable[[DataFrame], None] | None = None,
+        **stamps: Any,
+    ) -> None:
+        """The write-once table policy of the facades that score against
+        a persisted table (monitor_drift, tokenize, classify,
+        classify_text): the table
+        at ``path`` is written ONCE, from ``data``, so restarts and
+        re-registrations never swap it mid-stream; retraining is an
+        explicit overwrite of the path. ``write`` persists ``data``
+        (default: ``data`` plus one `_{knob}` literal column per
+        ``stamps`` entry, to ``path``). An existing table whose stamps
+        differ from ``stamps`` is refused, so scoring never runs
+        against a table built under other knobs. Facades call this
+        BEFORE `_register`: a failed registration claims nothing, and
+        the corrected retry on the same Stream succeeds."""
+        from pyspark.sql.utils import AnalysisException
+
+        try:
+            head = self.spark.read.parquet(path).head()
+        except AnalysisException:
+            # ONLY the missing-table path may trigger the write-once:
+            # a transient read failure on an EXISTING table must
+            # surface, not silently replace it
+            if data is None:
+                raise ValueError(
+                    f"{needs} DataFrame the first time: no table under {path}"
+                )
+            if write is not None:
+                write(data)
+            else:
+                data.withColumns(
+                    {f"_{k}": F.lit(v) for k, v in stamps.items()}
+                ).write.mode("overwrite").parquet(path)
+            return
+        if head is None:
+            return
+        row = head.asDict()
+        stamped = {k: row.get(f"_{k}", _UNSTAMPED.get(k)) for k in stamps}
+        if stamped != stamps:
+            knobs = ", ".join(f"{k}={v!r}" for k, v in stamped.items())
+            raise ValueError(
+                f"table under {path} was persisted with {knobs}; re-register "
+                "with those knobs or explicitly overwrite the path to retrain"
+            )
+
     def _start_query(
         self,
         df: DataFrame,
@@ -374,34 +430,18 @@ class Stream:
         # with tracing on, handlers must SEE the traceparent field to
         # continue the trace — append it like _attempt
         if self.tracer is not None and "traceparent" not in schema.fieldNames():
-            from pyspark.sql.types import StringType
-
             schema = StructType(
                 list(schema.fields) + [StructField("traceparent", StringType())]
             )
 
         def deco(fn: Callable) -> Callable:
-            if distribute:
-                import inspect as _inspect
-
-                n_pos = len(
-                    [
-                        p
-                        for p in _inspect.signature(fn).parameters.values()
-                        if p.kind
-                        in (
-                            _inspect.Parameter.POSITIONAL_ONLY,
-                            _inspect.Parameter.POSITIONAL_OR_KEYWORD,
-                        )
-                    ]
+            if distribute and _positional_arity(fn) >= 3:
+                raise ValueError(
+                    "distribute=True handlers cannot take ctx: durable "
+                    "group state is driver-owned; use the (event) or "
+                    "(msg_id, data) form, with IdempotentSink tokens "
+                    "for side-effect dedup"
                 )
-                if n_pos >= 3:
-                    raise ValueError(
-                        "distribute=True handlers cannot take ctx: durable "
-                        "group state is driver-owned; use the (event) or "
-                        "(msg_id, data) form, with IdempotentSink tokens "
-                        "for side-effect dedup"
-                    )
             for t in topics:
                 self._register(
                     "subscribe",
@@ -1171,8 +1211,6 @@ class Stream:
             write_drift_reference,
         )
 
-        from pyspark.sql.utils import AnalysisException
-
         group = group or f"{self.name}-drift"
         ref_path = ref_path or str(self.broker / "_indexes" / group)
         # cheap validations FIRST — before the claim AND before the
@@ -1192,18 +1230,12 @@ class Stream:
                 f"drift target ({drift_target!r}) — alert rows would "
                 "be read back as drift history"
             )
-        try:
-            self.spark.read.parquet(f"{ref_path}/total").head()
-        except AnalysisException:
-            # ONLY the missing-table path may trigger the write-once:
-            # a transient read failure on an EXISTING reference must
-            # surface, not silently move the yardstick
-            if reference is None:
-                raise ValueError(
-                    "monitor_drift needs a `reference` DataFrame the "
-                    f"first time: no reference table under {ref_path}"
-                )
-            write_drift_reference(reference, ref_path, text_col=text_field)
+        self._write_once(
+            f"{ref_path}/total",
+            reference,
+            "monitor_drift needs a `reference`",
+            lambda r: write_drift_reference(r, ref_path, text_col=text_field),
+        )
         self._register(
             "monitor_drift",
             topic,
@@ -1270,8 +1302,6 @@ class Stream:
         segments its DISTINCT words against that immutable table, so
         scoring is stateless per batch and exactly-once is just the
         idempotent per-batch_id sink."""
-        from pyspark.sql.utils import AnalysisException
-
         if tokenizer not in ("unigram", "wordpiece", "bpe"):
             raise ValueError(
                 "tokenizer must be 'unigram', 'wordpiece', or 'bpe', "
@@ -1292,41 +1322,13 @@ class Stream:
             raise ValueError(f"level must be 'char' or 'byte', got {level!r}")
         group = group or f"{self.name}-tokens"
         vocab_path = vocab_path or str(self.broker / "_indexes" / group)
-        # validate BEFORE claiming (see monitor_drift): a failed
-        # registration must not poison the claim for the retry
-        try:
-            head = self.spark.read.parquet(f"{vocab_path}/vocab").head()
-            existing = (
-                head["_tokenizer"]
-                if head is not None and "_tokenizer" in head.asDict()
-                else "unigram"  # pre-r13 tables carry no stamp
-            )
-            if head is not None and existing != tokenizer:
-                raise ValueError(
-                    f"vocabulary under {vocab_path} was persisted for "
-                    f"tokenizer={existing!r}; re-register with that or "
-                    "explicitly overwrite the path to retrain"
-                )
-            existing_level = (
-                head["_level"]
-                if head is not None and "_level" in head.asDict()
-                else "char"
-            )
-            if head is not None and existing_level != level:
-                raise ValueError(
-                    f"vocabulary under {vocab_path} was persisted at "
-                    f"level={existing_level!r}; byte and char merge "
-                    "tables are not interchangeable"
-                )
-        except AnalysisException:
-            if vocab is None:
-                raise ValueError(
-                    "tokenize needs a trained `vocab` DataFrame the "
-                    f"first time: no vocabulary under {vocab_path}"
-                )
-            vocab.withColumn("_tokenizer", F.lit(tokenizer)).withColumn(
-                "_level", F.lit(level)
-            ).write.mode("overwrite").parquet(f"{vocab_path}/vocab")
+        self._write_once(
+            f"{vocab_path}/vocab",
+            vocab,
+            "tokenize needs a trained `vocab`",
+            tokenizer=tokenizer,
+            level=level,
+        )
         self._register(
             "tokenize",
             topic,
@@ -1374,23 +1376,11 @@ class Stream:
         embedding values classify as the ZERO vector (z=0 for every
         class, pred = smallest label) — deterministic, and every
         document always yields a row."""
-        from pyspark.sql.utils import AnalysisException
-
         group = group or f"{self.name}-classes"
         weights_path = weights_path or str(self.broker / "_indexes" / group)
-        # validate BEFORE claiming (see monitor_drift): a failed
-        # registration must not poison the claim for the retry
-        try:
-            self.spark.read.parquet(f"{weights_path}/weights").head()
-        except AnalysisException:
-            if weights is None:
-                raise ValueError(
-                    "classify needs a trained `weights` DataFrame the "
-                    f"first time: no weight table under {weights_path}"
-                )
-            weights.write.mode("overwrite").parquet(
-                f"{weights_path}/weights"
-            )
+        self._write_once(
+            f"{weights_path}/weights", weights, "classify needs a trained `weights`"
+        )
         self._register(
             "classify",
             topic,
@@ -1437,32 +1427,15 @@ class Stream:
         idempotent per-batch_id sink; null or zero-gram text scores
         on the class priors alone — every document always yields a
         row."""
-        from pyspark.sql.utils import AnalysisException
-
         group = group or f"{self.name}-textclass"
         model_path = model_path or str(self.broker / "_indexes" / group)
-        # validate BEFORE claiming (the monitor_drift discipline)
-        try:
-            head = self.spark.read.parquet(f"{model_path}/model").head()
-            if head is not None:
-                stamped = (int(head["_n"]), int(head["_n_buckets"]))
-                if stamped != (int(n), int(n_buckets)):
-                    raise ValueError(
-                        f"model under {model_path} was persisted with "
-                        f"(n, n_buckets)={stamped}; grams would hash "
-                        "into a different bucket space — re-register "
-                        "with those knobs or explicitly overwrite the "
-                        "path to retrain"
-                    )
-        except AnalysisException:
-            if model is None:
-                raise ValueError(
-                    "classify_text needs a trained `model` DataFrame "
-                    f"the first time: no model table under {model_path}"
-                )
-            model.withColumn("_n", F.lit(int(n))).withColumn(
-                "_n_buckets", F.lit(int(n_buckets))
-            ).write.mode("overwrite").parquet(f"{model_path}/model")
+        self._write_once(
+            f"{model_path}/model",
+            model,
+            "classify_text needs a trained `model`",
+            n=int(n),
+            n_buckets=int(n_buckets),
+        )
         self._register(
             "classify_text",
             topic,
@@ -1691,12 +1664,6 @@ class Stream:
         not fit in that window cannot confirm a streak and stays
         quiet — bounded per-batch work wins over alerting on feeds
         quieter than ~one row per 8k/64 batches."""
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
         from pyspark.sql.window import Window
 
         drift_schema = StructType(

@@ -177,19 +177,27 @@ def test_hypothesis_parity_with_sequential_reference(spark, corpus, n):
     assert got_p == want_p
 
 
+def _n_persistent(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_null_label_refused(spark):
     df = spark.createDataFrame(
         [(0, "hello", "en"), (1, "bonjour", None)],
         "doc_id bigint, text string, lang string",
     )
+    before = _n_persistent(spark)
     with pytest.raises(ValueError, match="NULL labels"):
         charclf_train(df, "doc_id", "text", "lang")
+    assert _n_persistent(spark) == before  # refusal leaves no cache behind
 
 
 def test_empty_training_frame_refused(spark):
     df = spark.createDataFrame([], "doc_id bigint, text string, lang string")
+    before = _n_persistent(spark)
     with pytest.raises(ValueError, match="empty training frame"):
         charclf_train(df, "doc_id", "text", "lang")
+    assert _n_persistent(spark) == before  # refusal leaves no cache behind
 
 
 def test_short_tokens_emit_no_grams(spark):

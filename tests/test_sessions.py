@@ -22,10 +22,6 @@ from pyspark.sql.types import (
 )
 
 from python_stream_processing_framework_spark.streaming import Stream
-from python_stream_processing_framework_spark.streaming.sessions import (
-    HAS_TWS,
-    sessionize_stream_tws,
-)
 
 EVENT_SCHEMA = StructType(
     [
@@ -172,88 +168,27 @@ def test_sessionize_exactly_once_across_reruns(spark, stream):
     assert _sessions(stream) == first
 
 
-@pytest.mark.skipif(
-    HAS_TWS, reason="protobuf present: the TWS path runs for real elsewhere"
-)
-def test_tws_raises_clearly_without_protobuf(spark):
-    df = spark.createDataFrame([("u", 1.0, 1.0)], EVENT_SCHEMA)
-    with pytest.raises(RuntimeError, match="protobuf"):
-        sessionize_stream_tws(df, "key", "timestamp", 5_000, _make_sum_fold())
-
-
-@pytest.mark.skipif(not HAS_TWS, reason="transformWithState needs protobuf")
-def test_tws_requires_rocksdb_provider(spark):
-    provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    if "RocksDB" in (provider or ""):
-        pytest.skip("RocksDB provider already configured")
-    df = spark.createDataFrame([("u", 1.0, 1.0)], EVENT_SCHEMA)
-    with pytest.raises(RuntimeError, match="RocksDB"):
-        sessionize_stream_tws(df, "key", "timestamp", 5_000, _make_sum_fold())
-
-
-@pytest.mark.skipif(not HAS_TWS, reason="transformWithState needs protobuf")
-def test_tws_matches_canonical_path_end_to_end(spark, tmp_path):
-    """Compat contract: the TWS form must emit EXACTLY the canonical
-    path's sessions on the same input (both run _fold_batch, so a
-    divergence means timer/state wiring broke). Protobuf-gated, like
-    the live-broker tests: skips cleanly in environments without the
-    TWS python client, runs for real where it exists."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from python_stream_processing_framework_spark.streaming.sessions import (
-        _ROCKSDB_PROVIDER,
-        sessionize_stream,
+def test_event_at_initial_watermark_never_reaches_the_fold(spark, stream):
+    """Input contract (docs/streaming.md § Sessions): Spark's stateful
+    late-row filter drops an event at exactly the initial watermark
+    (0 ms). With watermark_delay_ms=0 an event at epoch 0 never reaches
+    the fold: its key opens no session, even after the watermark passes
+    0 + gap. An event 1 ms later folds normally."""
+    stream.emit(
+        "s",
+        {"key": "zero", "timestamp": 0.0, "value": 1.0},
+        {"key": "later", "timestamp": 0.001, "value": 2.0},
     )
-
-    rows = [
-        ("u1", 1.0, 5.0),
-        ("u1", 3.0, 10.0),
-        ("u1", 30.0, 7.0),  # gap > 5s closes the first session
-        ("u2", 2.0, 2.5),
-    ]
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    (src_dir / "events.json").write_text(
-        "\n".join(
-            _json.dumps({"key": k, "timestamp": t, "value": v}) for k, t, v in rows
-        )
+    stream.sessionize(
+        "s",
+        EVENT_SCHEMA,
+        key_field="key",
+        gap_ms=5_000,
+        fold=_make_sum_fold(),
+        watermark_delay_ms=0,
     )
-
-    def run(sessionize, use_rocksdb):
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        if use_rocksdb:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-            )
-        try:
-            src = (
-                spark.readStream.schema(EVENT_SCHEMA)
-                .json(str(src_dir))
-                .withColumn("timestamp", F.timestamp_seconds(F.col("timestamp")))
-            )
-            out = sessionize(
-                src, "key", "timestamp", 5_000, _make_sum_fold(),
-                watermark_delay="0 seconds",
-            )
-            collected = []
-            q = (
-                out.writeStream.foreachBatch(
-                    lambda b, _: collected.extend(r.asDict() for r in b.collect())
-                )
-                .option("checkpointLocation", str(tmp_path / f"ck-{use_rocksdb}"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return sorted(tuple(r.values()) for r in collected)
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-
-    assert run(sessionize_stream_tws, True) == run(sessionize_stream, False)
+    stream.run_until_idle()
+    # a much later event pushes the watermark past every open session
+    stream.emit("s", {"key": "w", "timestamp": 100.0, "value": 9.0})
+    stream.run_until_idle()
+    assert _sessions(stream) == [("later", 1, 5_001, 1, 2.0)]

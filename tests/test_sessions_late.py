@@ -5,10 +5,8 @@ The reference routes late events to a `{topic}-late` DLQ BEFORE any
 session attribution exists (pspf/stream.py:402-413). The grace mode
 captures a straggler AFTER its session closed, attributed to that
 session's boundaries, instead of Spark's silent stateful late-row
-drop. These tests drive the canonical applyInPandasWithState path
-end-to-end through the facade; the TWS named-timer form is pinned to
-identical output by a protobuf-gated parity test, like the other TWS
-tests.
+drop. These tests drive the applyInPandasWithState path end-to-end
+through the facade.
 """
 
 from __future__ import annotations
@@ -26,9 +24,7 @@ from pyspark.sql.types import (
 
 from python_stream_processing_framework_spark.streaming import Stream
 from python_stream_processing_framework_spark.streaming.sessions import (
-    HAS_TWS,
     sessionize_stream,
-    sessionize_stream_tws,
 )
 
 # Heavyweight battery: slow tier (see pyproject addopts; VERDICT r15 #1)
@@ -234,89 +230,6 @@ def test_grace_requires_watermark_delay(spark):
         sessionize_stream(
             df, "key", "timestamp", 5_000, _make_sum_fold(), grace_ms=1_000
         )
-    with pytest.raises(ValueError, match="watermark_delay"):
-        sessionize_stream_tws(
-            df, "key", "timestamp", 5_000, _make_sum_fold(), grace_ms=1_000
-        )
-
-
-@pytest.mark.skipif(not HAS_TWS, reason="transformWithState needs protobuf")
-def test_tws_grace_matches_canonical_path(spark, tmp_path):
-    """The named-timer TWS grace form must emit exactly the canonical
-    path's rows (sessions AND attributed lates) on the same two-wave
-    input. Protobuf-gated like the other TWS tests."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from python_stream_processing_framework_spark.streaming.sessions import (
-        _ROCKSDB_PROVIDER,
-    )
-
-    wave1 = [("u", 10.0, 1.0), ("u", 14.0, 2.0), ("v", 30.0, 9.0)]
-    wave2 = [("u", 13.0, 7.0)]
-
-    def run(sessionize, use_rocksdb):
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        if use_rocksdb:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-            )
-        try:
-            src_dir = tmp_path / f"src-{use_rocksdb}"
-            src_dir.mkdir()
-            collected = []
-
-            def drain():
-                src = (
-                    spark.readStream.schema(EVENT_SCHEMA)
-                    .json(str(src_dir))
-                    .withColumn(
-                        "timestamp", F.timestamp_seconds(F.col("timestamp"))
-                    )
-                )
-                out = sessionize(
-                    src, "key", "timestamp", 5_000, _make_sum_fold(),
-                    watermark_delay="2 seconds", grace_ms=20_000,
-                )
-                q = (
-                    out.writeStream.foreachBatch(
-                        lambda b, _: collected.extend(
-                            r.asDict() for r in b.collect()
-                        )
-                    )
-                    .option(
-                        "checkpointLocation", str(tmp_path / f"ck-{use_rocksdb}")
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-
-            for i, wave in enumerate((wave1, wave2)):
-                (src_dir / f"wave{i}.json").write_text(
-                    "\n".join(
-                        _json.dumps(
-                            {"key": k, "timestamp": t, "value": v}
-                        )
-                        for k, t, v in wave
-                    )
-                )
-                drain()
-            return sorted(
-                tuple(r[c] for c in ("key", "kind", "session_start_ms",
-                                     "session_end_ms", "n_events", "ts_ms"))
-                for r in collected
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-
-    assert run(sessionize_stream_tws, True) == run(sessionize_stream, False)
 
 
 def test_grace_sessions_exactly_once_across_crash_replay(spark, tmp_path):
