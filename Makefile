@@ -10,7 +10,7 @@
 PYTEST ?= python -m pytest
 COMPOSE ?= docker compose
 
-.PHONY: test test-slow bench loc integration integration-local integration-up integration-down
+.PHONY: test test-slow bench perfbench loc integration integration-local integration-up integration-down
 
 test:
 	$(PYTEST) tests/ -x -q
@@ -23,6 +23,15 @@ test-slow:
 
 bench:
 	python bench.py
+
+# One traced run of each benchmark workload (seed 1, 12 s), printing
+# each run's final JSON line: the per-layer numbers a perf change
+# quotes before and after.
+perfbench:
+	@for w in catalog events_live; do \
+	    out=$$(python3 perfbench/run.py --workload $$w --seed 1 --seconds 12 --trace 1) || exit 1; \
+	    printf '%s\n' "$$out" | tail -n 1; \
+	done
 
 # The three line counts the roadmap tracks: every package *.py file,
 # the streaming facade module, and the bench driver.

@@ -5,6 +5,12 @@ pipeline ``documents``/``embeddings``) live one-parquet-per-table in a
 scale-factor directory. At 100 TB these would be partitioned/bucketed
 parquet or Iceberg tables; the loader is the single place that would
 change — every operator downstream consumes plain DataFrames.
+
+Loads are schema-memoized (``operators.common.read_parquet``): the
+first read of a table infers its parquet schema with a Spark job, and
+every later ``load``/``load_tables``/``register_views`` of the
+unchanged file builds a fresh DataFrame from the memoized schema with
+no Spark job.
 """
 
 from __future__ import annotations
@@ -13,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from python_stream_processing_framework_spark.operators.common import read_parquet
 from python_stream_processing_framework_spark.session import ensure_utc
 
 TABLES = (
@@ -42,18 +49,19 @@ _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in _NANOS_TS_COLS.get(name, ()):
-        if isinstance(df.schema[col].dataType, LongType):
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} DIV 1000")))
-    # Generations that store TIMESTAMP(MICROS, isAdjustedToUTC=false)
-    # normally read as plain TIMESTAMP via the session conf
-    # (parquet.inferTimestampNTZ.enabled=false, see session.ensure_utc);
-    # cast defensively in case the caller's session read NTZ anyway.
-    for field in df.schema.fields:
-        if isinstance(field.dataType, TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return df
+    df, schema = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    nanos = _NANOS_TS_COLS.get(name, ())
+    fixes = {}
+    for field in schema.fields:
+        if field.name in nanos and isinstance(field.dataType, LongType):
+            fixes[field.name] = F.timestamp_micros(F.expr(f"{field.name} DIV 1000"))
+        # Generations that store TIMESTAMP(MICROS, isAdjustedToUTC=false)
+        # normally read as plain TIMESTAMP via the session conf
+        # (parquet.inferTimestampNTZ.enabled=false, see session.ensure_utc);
+        # cast defensively in case the caller's session read NTZ anyway.
+        elif isinstance(field.dataType, TimestampNTZType):
+            fixes[field.name] = F.col(field.name).cast("timestamp")
+    return df.withColumns(fixes) if fixes else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Row cap under which a vocabulary-keyed side table is broadcast-
 # hinted. Sizing math (SCALE.md "Size-gated broadcasts"): a (token,
@@ -22,6 +24,58 @@ BROADCAST_ROW_CAP = 2_000_000
 _TRACKED_FRAMES: list[DataFrame] = []
 _TRACKED_BROADCASTS: list = []
 _TRACKED_RELEASERS: list = []
+
+# path -> ((modification time, length), schema inferred at that stamp);
+# see read_parquet.
+_PARQUET_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    """``spark.read.parquet(path)`` and its schema, inferring the schema
+    once per version of the table.
+
+    Spark infers a parquet schema with a job
+    (``mergeSchemasInParallel``), even for a single file. This helper
+    memoizes the inferred schema per path, stamped with the path's
+    Hadoop ``(modification time, length)`` from one ``getFileStatus``
+    call. While the stamp is unchanged, the read passes the memoized
+    schema to ``spark.read.schema(...)`` and runs no job. Every call
+    still returns a fresh relation, with a fresh file listing and fresh
+    attribute ids, so a query that reads one table twice does not
+    self-join one plan.
+
+    Invalidation contract:
+
+    - The memo is keyed by path, modification time and length. A
+      rewrite that changes either is inferred again; a Spark overwrite
+      of a table directory re-creates the directory, so it always does.
+    - A rewrite of the same length within the filesystem's timestamp
+      granularity is not detected. Spark's own file-status cache has
+      the same limit, which is why Spark needs ``REFRESH TABLE``.
+    - Concurrent callers (two ``foreachBatch`` callbacks) may both miss
+      and infer twice. That is harmless, so there is no lock.
+
+    The memo is process-wide. A hit reuses the schema Spark inferred at
+    the miss, under that read's session confs (``session.ensure_utc``
+    for catalog tables); the returned schema is the memoized object, so
+    callers must not mutate it. A path whose status cannot be read
+    (missing, or a glob) bypasses the memo, so Spark raises its usual
+    error for it.
+    """
+    try:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        status = fs.getFileStatus(jpath)
+    except Py4JJavaError:
+        df = spark.read.parquet(path)
+        return df, df.schema
+    stamp = (status.getModificationTime(), status.getLen())
+    hit = _PARQUET_SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
+    df = spark.read.parquet(path)
+    _PARQUET_SCHEMAS[path] = (stamp, df.schema)
+    return df, df.schema
 
 
 def materialize(df: DataFrame) -> DataFrame:

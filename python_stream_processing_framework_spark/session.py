@@ -23,9 +23,10 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver convention) or
-    all local cores. ``shuffle_partitions`` defaults to the core count
-    — on a real cluster you would size this to ~2-3x total executor
-    cores and let AQE coalesce; locally, cores is the right number.
+    all local cores. ``shuffle_partitions`` defaults to ``max(cpus, 4)``:
+    the core count, but never fewer than 4 (so 4 on ``local[2]``) — on
+    a real cluster you would size this to ~2-3x total executor cores
+    and let AQE coalesce; locally, about the core count is right.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

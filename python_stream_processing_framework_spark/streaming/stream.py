@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from python_stream_processing_framework_spark.operators.common import read_parquet
 from python_stream_processing_framework_spark.streaming.dlq import (
     _positional_arity,
     handle_batch_with_retries,
@@ -1025,7 +1026,7 @@ class Stream:
                     # empty / all-null held-out: nothing can flag
                     _write_batch_jsonl(batch, clean_dir, batch_id)
                     return
-                sigs_h = batch.sparkSession.read.parquet(o["sigs_path"])
+                sigs_h, _ = read_parquet(batch.sparkSession, o["sigs_path"])
                 clean = semantic_decontaminate(
                     batch,
                     id_col=o["id_field"],
@@ -1506,8 +1507,8 @@ class Stream:
         def classify_batch(batch: DataFrame, batch_id: int) -> None:
             if batch.isEmpty():
                 return
-            weights = batch.sparkSession.read.parquet(
-                f"{o['weights_path']}/weights"
+            weights, _ = read_parquet(
+                batch.sparkSession, f"{o['weights_path']}/weights"
             )
             dim = 1 + weights.agg(F.max("dim")).head()[0]
             # null / wrong-dim / element-null vectors -> the zero
@@ -1551,8 +1552,8 @@ class Stream:
         def tokenize_batch(batch: DataFrame, batch_id: int) -> None:
             if batch.isEmpty():
                 return
-            vocab = batch.sparkSession.read.parquet(
-                f"{o['vocab_path']}/vocab"
+            vocab, _ = read_parquet(
+                batch.sparkSession, f"{o['vocab_path']}/vocab"
             )
             # null text meters as empty — tokens_expr(NULL) explodes
             # to nothing and the doc's row would silently vanish,
