@@ -33,13 +33,11 @@ perfbench:
 	    printf '%s\n' "$$out" | tail -n 1; \
 	done
 
-# The three line counts the roadmap tracks: every package *.py file,
-# the streaming facade module, and the bench driver.
-PKG := python_stream_processing_framework_spark
+# The three line counts the roadmap tracks (every package *.py file,
+# the streaming facade module, the bench script), each as raw lines
+# and as code lines: blank lines, comments and docstrings excluded.
 loc:
-	@printf '%-22s %6s\n' package "$$(find $(PKG) -name '*.py' -exec cat {} + | wc -l)"
-	@printf '%-22s %6s\n' streaming/stream.py "$$(wc -l < $(PKG)/streaming/stream.py)"
-	@printf '%-22s %6s\n' bench.py "$$(wc -l < bench.py)"
+	@python3 tools/loc.py
 
 integration-up:
 	$(COMPOSE) up -d --wait valkey kafka

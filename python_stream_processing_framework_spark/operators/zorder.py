@@ -1,6 +1,6 @@
 """Z-order (Morton) layout: multi-dimensional data skipping.
 
-Bucketing (operators/bucketing.py) kills the join shuffle on ONE key;
+Bucketing (Spark's `bucketBy`) kills the join shuffle on ONE key;
 Z-ordering solves the other table-layout problem: range queries over
 TWO correlated dimensions (user x time, domain x date). Sorting files
 by a single column gives tight parquet min/max stats on that column

@@ -12,13 +12,16 @@ from __future__ import annotations
 import importlib.util
 import json
 import random
+from pathlib import Path
 
 import pytest
 
 
 @pytest.fixture(scope="module")
 def bench():
-    spec = importlib.util.spec_from_file_location("bench", "/root/repo/bench.py")
+    spec = importlib.util.spec_from_file_location(
+        "bench", Path(__file__).resolve().parent.parent / "bench.py"
+    )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -65,3 +68,71 @@ def test_tail_safe_line_huge_catalog_still_fits(bench):
     assert len(line) <= 1900
     rec = json.loads(line)
     assert rec["queries_omitted"] == 500 - len(rec["queries"])
+
+
+#: the nine scale-ratio extras and their stage names, as bench.py runs them
+_RATIO_STAGES = {
+    "corpus_pipeline_10x": ("quality", "dedup", "decontaminate", "mixture", "packing"),
+    "unigram_zipf": ("word_table_s", "train_s", "encode_s"),
+    "wordpiece_zipf": ("train_s", "per_merge_s", "train_batch8_s", "vocab_s", "encode_s"),
+    "probe_dim768": ("train_s", "predict_s"),
+    "charclf_zipf": ("train_s", "predict_s"),
+    "spans_ratio": ("keep_first_mask_s", "maximal_spans_s"),
+    "setsim_ratio": ("setsim_s",),
+    "lm_backoff_ratio": ("train_s", "score_s"),
+    "pq_ratio": ("train_s", "encode_s", "adc_s"),
+}
+
+
+def test_tail_safe_line_carries_the_scale_ratios(bench):
+    rng = random.Random(2)
+    ratios = {
+        extra: {stage: round(rng.uniform(0.5, 120), 2) for stage in stages}
+        for extra, stages in _RATIO_STAGES.items()
+    }
+    timings = _fake_timings(500)
+    total = round(sum(timings.values()), 3)
+    flagged = sorted(timings)[:40]
+    line = bench._tail_safe_line(
+        total,
+        timings,
+        "0.1",
+        "32",
+        prev_round=16,
+        vs_prev={n: 1.31 for n in flagged},
+        suspect_load=flagged,
+        band_exceeded={n: {} for n in flagged},
+        band_window_ratio=1.07,
+        ratios=ratios,
+    )
+    assert len(line) <= 1900
+    rich = json.dumps({"queries": timings, "extras": ratios})
+    rec = json.loads((rich + "\n" + line)[-2000:].splitlines()[-1])
+    assert rec["value"] == total
+    assert rec["ratio_10x"] == {
+        extra: {stage.removesuffix("_s"): round(r, 1) for stage, r in stages.items()}
+        for extra, stages in ratios.items()
+    }
+
+
+@pytest.mark.parametrize("nested", [False, True], ids=["top_level_s_keys", "stages_dict"])
+def test_scale_ratio_counts_two_runs_and_skips_zero_stages(bench, monkeypatch, nested):
+    released = []
+    monkeypatch.setattr(bench, "_release", lambda: released.append(True))
+    walls = {
+        2: {"a_s": 7.0, "b_s": 7.0, "c_s": 7.0},  # the uncounted warm-up
+        10: {"a_s": 1.0, "b_s": 0.5, "c_s": 0.0},
+        100: {"a_s": 12.0, "b_s": 2.0, "c_s": 3.0},
+    }
+
+    def run(n):
+        if nested:
+            return {"docs": n, "stages": walls[n], "total_s": sum(walls[n].values())}
+        return {"docs": n, **walls[n]}
+
+    out = bench._scale_ratio(run, (2, 10, 100))
+    assert set(out) == {"1x", "10x", "stage_ratio_10x_over_1x"}
+    assert (out["1x"]["docs"], out["10x"]["docs"]) == (10, 100)
+    # a stage that took 0 s at 1x has no ratio, and nothing raised
+    assert out["stage_ratio_10x_over_1x"] == {"a_s": 12.0, "b_s": 4.0}
+    assert len(released) == 3  # every run, the warm-up included, is cleaned up
