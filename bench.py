@@ -1270,12 +1270,12 @@ def _wordpiece_zipf(spark, n_docs: int) -> dict:
     which cannot evidence the claims that matter at scale — that each
     merge round's cost is bounded by the DISTINCT-word table (Zipf-
     sublinear), not the corpus, and that the greedy encode is one
-    corpus-linear join. Runs wordpiece_train (16 merges — per-merge
-    wall is the scale-relevant number; a 30k-merge vocabulary is
-    n_merges/batch driver round-trips exactly as bpe.py documents),
-    wordpiece_vocab, and wordpiece_segment_counts on the Zipf corpus
-    at 10k and 100k docs with per-stage walls and 10x ratios. Healthy:
-    train ratio well under 10, encode ratio ~10."""
+    corpus-linear join. Runs wordpiece_train (16 merges over one
+    collect of the word table — the train stage prices the collect
+    and the driver-side merge loop), wordpiece_vocab, and
+    wordpiece_segment_counts on the Zipf corpus at 10k and 100k docs
+    with per-stage walls and 10x ratios. Healthy: train ratio well
+    under 10, encode ratio ~10."""
     docs = materialize(_zipf_docs(spark, n_docs))
     out: dict = {"docs": docs.count()}
     merges, out["train_s"] = _timed(
@@ -1284,25 +1284,6 @@ def _wordpiece_zipf(spark, n_docs: int) -> dict:
         )
     )
     out["per_merge_s"] = round(out["train_s"] / _WORDPIECE_MERGES, 3)
-    # batched training (r13 verdict #2): identical merge table by
-    # construction (acceptance is exact — see wordpiece_train),
-    # fewer driver round-trips; merges/round is the scale number
-    # (a 30k-merge vocabulary is 30k/mpr sequential rounds)
-    rounds: list = []
-    _, out["train_batch8_s"] = _timed(
-        lambda: wordpiece_train(
-            docs,
-            "text",
-            n_merges=_WORDPIECE_MERGES,
-            max_word_len=8,
-            batch=8,
-            rounds_out=rounds,
-        )
-    )
-    out["batch8_rounds"] = len(rounds)
-    out["batch8_merges_per_round"] = round(
-        _WORDPIECE_MERGES / max(1, len(rounds)), 2
-    )
     vocab, out["vocab_s"] = _timed(
         lambda: materialize(wordpiece_vocab(docs, "text", merges, max_word_len=8))
     )
@@ -1355,6 +1336,9 @@ def _spans_ratio(spark, n_docs: int) -> dict:
         lambda: _noop(mask_duplicate_spans_keep_first(docs, "doc_id", "text", n=13))
     )
     _release()
+    # the release evicted the corpus too: cache it again untimed, so
+    # maximal_spans_s prices the operator, not the generator
+    docs = materialize(docs)
     _, out["maximal_spans_s"] = _timed(
         lambda: _noop(maximal_duplicate_spans(docs, "doc_id", "text", n=13))
     )
@@ -1706,30 +1690,19 @@ def _semdedup_100k(spark, sf_dir: str) -> dict:
 
 def _bpe_256_merges(spark, sf_dir: str) -> dict:
     """Real-vocabulary BPE training cost: 256 merges over the
-    documents corpus. Sequential training is one driver round-trip
-    (2 vocab-bounded shuffles + a 1-row argmax) PER MERGE — the
-    catalog's n_merges=8 hides that the loop is the scale knob.
-    batch=16 selects the top symbol-disjoint 16 pairs per round, so
-    256 merges take ~16 rounds instead of 256. Reported side by side
-    with a 32-merge sequential run's per-merge rate to show the
-    per-merge cost drop; segmentation-quality parity is pinned by
-    tests/test_properties.py."""
+    documents corpus. Training collects the word table once and
+    merges driver-side, so the merge count should move the wall by
+    Python time only, not by Spark jobs (the catalog's n_merges=8
+    cannot show that). Training stops early when every word has
+    fused, so ``merges`` can be under 256."""
     (documents,) = load(spark, sf_dir, "documents")
-    n_seq, seq_s = _timed(
-        lambda: bpe_train(documents, "text", n_merges=32, batch=1).count()
-    )
-    _release()
-    n_batched, batched_s = _timed(
-        lambda: bpe_train(documents, "text", n_merges=256, batch=16).count()
+    merges, train_s = _timed(
+        lambda: bpe_train(documents, "text", n_merges=256).count()
     )
     return {
-        "sequential_32_s": seq_s,
-        "sequential_merges": n_seq,
-        "sequential_s_per_merge": round(seq_s / max(n_seq, 1), 4),
-        "batched_256_s": batched_s,
-        "batched_merges": n_batched,
-        "batched_s_per_merge": round(batched_s / max(n_batched, 1), 4),
-        "batch": 16,
+        "train_256_s": train_s,
+        "merges": merges,
+        "s_per_merge": round(train_s / max(merges, 1), 4),
     }
 
 

@@ -32,8 +32,9 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     spark = get_spark("tokenizer-training")
     (docs,) = load(spark, sf_dir, "documents")
 
-    # --- BPE: 8 merges, batched 4 per round (the distributed shape)
-    merges = bpe_train(docs, "text", n_merges=8, batch=4)
+    # --- BPE: 8 merges, one collect of the word table then a
+    # driver-side merge loop
+    merges = bpe_train(docs, "text", n_merges=8)
     top = [(r["left"], r["right"]) for r in merges.orderBy("merge_idx").collect()]
     print(f"BPE merges learned: {top}")
     bpe_counts = bpe_segment_counts(docs, "doc_id", "text", merges)

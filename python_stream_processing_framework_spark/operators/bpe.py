@@ -1,33 +1,42 @@
-"""Distributed BPE vocabulary induction (Sennrich et al. 2016) —
-the tokenizer-training step of an LLM data pipeline, Spark-first.
+"""BPE vocabulary induction (Sennrich et al. 2016) — the
+tokenizer-training step of an LLM data pipeline, Spark-first.
 
 Beyond-reference capability (SURVEY §2.7). The published algorithm
-is inherently sequential in its merge choices but NOT in its data:
-after ONE corpus pass collapses the corpus to a word-frequency
-table, every round of the merge loop runs on that vocabulary-bounded
-table (two small shuffles: pair count + argmax), never on the corpus
-again. That is the published shape — reference BPE trainers operate
-on word counts, not raw text — distributed.
+is sequential in its merge choices but not in its data: ONE
+distributed corpus pass collapses the corpus to a word-frequency
+table, and every merge round after that works on that vocabulary-
+bounded table, never on the corpus. That is the published shape —
+reference BPE trainers operate on word counts, not raw text. The
+trainer collects the seeded table once and runs the whole merge
+loop driver-side (`_learn_merges`, shared with WordPiece) with
+incremental pair counts: a pair -> words index, so each merge
+touches only the words that contain the pair, as in Sennrich's
+`learn_bpe.py`. Training is one Spark collect whatever the merge
+count; the table must fit in driver memory (SCALE.md).
 
-Determinism contract: symbol sequences are DOUBLE-space-delimited
-strings with single-space ends (`' a  b  c '`); a merge of pair
-(l, r) is the literal replacement ``' l  r ' -> ' lr '``. The
-2-char separators make every match block-aligned on BOTH sides —
-a one-sided delimiter is subtly wrong when one symbol is a string
-prefix of another (`' a ab'` contains `' a a'`: the leading-space
-form merged across the symbol boundary; caught by the hypothesis
-parity test against sequential BPE) — while left-to-right
-non-overlapping replacement still gives the standard
-greedy-leftmost application (`' a  a  a '` under (a,a) ->
-`' aa  a '`; runs of any length pair off left-to-right because
-consumed matches end on the first char of the next separator).
-String replacement and the (count DESC, left, right) argmax
-tie-break behave identically in Spark and DuckDB, so the whole
-training loop unrolls into SQL CTEs bit-exactly (queries/bpe.py),
-the same way the PQ Lloyd trainer does.
+Determinism contract: the argmax tie-break is (score DESC, left,
+right), and a merge rewrites each word left-to-right without
+overlap (`a a a` under (a, a) -> `aa a`). Python's code-point string
+order equals Spark's binary UTF-8 order, so the learned table is the
+one the SQL oracle (queries/bpe.py) replays round by round.
+
+Encode applies the table with Spark column expressions: symbol
+sequences are DOUBLE-space-delimited strings with single-space ends
+(`' a  b  c '`), and a merge of pair (l, r) is the literal
+replacement ``' l  r ' -> ' lr '``. The 2-char separators make every
+match block-aligned on BOTH sides — a one-sided delimiter is subtly
+wrong when one symbol is a string prefix of another (`' a ab'`
+contains `' a a'`) — while left-to-right non-overlapping replacement
+is exactly the trainer's rewrite (runs of any length pair off
+left-to-right because consumed matches end on the first char of the
+next separator). The seed expressions below are the single
+definition of a word's initial symbols for training and encode.
 """
 
 from __future__ import annotations
+
+import operator
+from collections import defaultdict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -36,14 +45,6 @@ from python_stream_processing_framework_spark.operators.dedup import tokens_expr
 
 #: Schema of the learned merge table.
 MERGES_SCHEMA = "merge_idx int, left string, right string, pair_count bigint"
-
-
-#: Lineage-truncation cadence for the training loops (r15): a
-#: localCheckpoint every N rounds bounds the replace chain at
-#: N*batch literal rewrites while cutting the per-round eager
-#: checkpoint jobs ~4x. 1 restores the old truncate-every-round
-#: behavior (tests pin identical merge tables either way).
-_CKPT_EVERY = 4
 
 
 def _bytes_to_unicode() -> list[str]:
@@ -116,21 +117,6 @@ def _seed_expr(level: str):
     raise ValueError(f"level must be 'char' or 'byte', got {level!r}")
 
 
-def _pairs_expr(syms: Column) -> Column:
-    """Adjacent symbol pairs as 'l<US>r' strings (every occurrence —
-    the standard BPE count); empty for single-symbol sequences."""
-    n = F.size(syms)
-    return F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(
-                "\x1f", F.element_at(syms, i), F.element_at(syms, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def word_frequency_table(df: DataFrame, text_col: str) -> DataFrame:
     """The one corpus pass: (word, cnt) over whitespace tokens.
     Output size is VOCABULARY-bounded; everything downstream (the
@@ -142,12 +128,85 @@ def word_frequency_table(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
+def _symbols(seq: Column) -> Column:
+    """The symbol array of a double-space-delimited sequence. Spark's
+    trim strips spaces only, so a symbol such as '\\t' survives."""
+    return F.split(F.trim(seq), "  ")
+
+
+def _rewrite(syms: list, left: str, right: str, merged: str) -> list:
+    """One merge applied left-to-right without overlap."""
+    out, i, n = [], 0, len(syms)
+    while i < n:
+        if i + 1 < n and syms[i] == left and syms[i + 1] == right:
+            out.append(merged)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _learn_merges(words: DataFrame, seed, n_merges: int, *, score, merged):
+    """The merge loop both trainers share. Collects the (word, cnt)
+    table's seeded symbol arrays in one collect, then merges driver-side:
+    each round picks the pair with the highest ``score(count,
+    count(left), count(right))`` (ties: left, then right ascending)
+    and rewrites the words that contain it into ``merged(left,
+    right)``. Pair and symbol counts update incrementally from a
+    pair -> words index, so a round costs the words it touches plus
+    one argmax over the live pairs. Stops early when no pair remains.
+    Returns [(left, right, pair_count, score)] in application order."""
+    rows = words.select(_symbols(seed(F.col("word"))).alias("s"), "cnt").collect()
+    seqs = [r["s"] for r in rows]
+    cnts = [r["cnt"] for r in rows]
+    pairs: dict[tuple[str, str], int] = defaultdict(int)
+    sym_cnt: dict[str, int] = defaultdict(int)
+    # word ids that may hold a pair; an id whose word no longer does
+    # is skipped when the pair merges (its rewrite is a no-op)
+    where: dict[tuple[str, str], set[int]] = defaultdict(set)
+    for i, (syms, c) in enumerate(zip(seqs, cnts)):
+        for s in syms:
+            sym_cnt[s] += c
+        for p in zip(syms, syms[1:]):
+            pairs[p] += c
+            where[p].add(i)
+
+    def scored(p: tuple[str, str]) -> int:
+        return score(pairs[p], sym_cnt[p[0]], sym_cnt[p[1]])
+
+    out: list[tuple[str, str, int, int]] = []
+    while len(out) < n_merges:
+        live = [p for p, n in pairs.items() if n]
+        if not live:
+            break
+        left, right = best = min(live, key=lambda p: (-scored(p), p))
+        out.append((left, right, pairs[best], scored(best)))
+        m = merged(left, right)
+        for i in where.pop(best):
+            old, c = seqs[i], cnts[i]
+            new = seqs[i] = _rewrite(old, left, right, m)
+            k = (len(old) - len(new)) * c
+            if not k:
+                continue
+            sym_cnt[left] -= k
+            sym_cnt[right] -= k
+            sym_cnt[m] += k
+            for p in zip(old, old[1:]):
+                pairs[p] -= c
+            for p in zip(new, new[1:]):
+                pairs[p] += c
+                # every pair the merge created holds m
+                if m in p:
+                    where[p].add(i)
+    return out
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str,
     *,
     n_merges: int = 8,
-    batch: int = 1,
     level: str = "char",
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus.
@@ -162,123 +221,57 @@ def bpe_train(
     printable ASCII to itself — pinned by test).
 
     Returns the merge table (merge_idx, left, right, pair_count) —
-    merge_idx is application order. Each round: count every adjacent
-    symbol pair weighted by word frequency, pick the most frequent
-    (ties: count DESC, then (left, right) ascending — fully
-    deterministic), rewrite the vocabulary with the merge. Training
+    merge_idx is application order. Each round merges the adjacent
+    symbol pair with the highest count weighted by word frequency
+    (ties: (left, right) ascending — fully deterministic). Training
     stops early if no pair remains (every word fused to one symbol).
 
-    ``batch > 1`` is the distributed-vocabulary-training shape: each
-    round greedily selects up to ``batch`` pairs from the count
-    ranking such that no selected pair shares a symbol with a
-    higher-ranked selected pair (and no pair's symbol equals a
-    higher-ranked selection's MERGED token — that token can gain new
-    occurrences mid-round, which would make its measured count
-    stale). Symbol-disjoint merges commute: merging (a, b) only
-    creates/destroys adjacencies touching ``a`` or ``b``, so every
-    selected pair's count and every selected pattern's match set are
-    EXACTLY what the round measured, and the chained rewrite applies
-    each merge precisely as if it ran alone. The learned table can
-    differ from sequential BPE (sequential re-ranks after every
-    merge); the hypothesis test pins segmentation-quality parity.
-    ``batch=1`` is bit-identical to the published sequential
-    algorithm and is what the SQL oracle replays.
-
-    Scale shape: after `word_frequency_table`'s single corpus pass,
-    each round is two vocabulary-bounded shuffles plus a bounded
-    (``3*batch + 8``-row) top-k collect; the vocabulary is
-    re-checkpointed per round — lineage truncation, NOT just caching,
-    because an iterative rewrite chain grows the analyzed plan and
-    per-round planning cost compounds — and each round's blocks are
-    released as soon as the next is built. Driver round-trips are
-    O(n_merges / batch), the knob that makes a real 32k-merge
-    vocabulary ~2k Spark jobs instead of ~64k.
+    Scale shape: one distributed corpus pass to the word-frequency
+    table, one collect of its seeded symbols, then the driver-side
+    merge loop (`_learn_merges`): the Spark job count does not depend
+    on ``n_merges``.
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if batch < 1:
-        raise ValueError(f"batch must be >= 1, got {batch}")
-    seed = _seed_expr(level)
-    spark = df.sparkSession
-    # Lineage truncation per round (the shared iterative-loop
-    # helpers; see checkpoint_truncate's docstring for the measured
-    # compounding-analysis-cost rationale)
-    from python_stream_processing_framework_spark.operators.common import (
-        checkpoint_truncate as _truncate,
-        release_checkpoint as _release,
+    learned = _learn_merges(
+        word_frequency_table(df, text_col),
+        _seed_expr(level),
+        n_merges,
+        score=lambda count, _cl, _cr: count,
+        merged=operator.add,
+    )
+    return df.sparkSession.createDataFrame(
+        [(i, left, right, count) for i, (left, right, count, _) in enumerate(learned)],
+        MERGES_SCHEMA,
     )
 
-    merges: list[tuple[int, str, str, int]] = []
-    prev = _truncate(
-        word_frequency_table(df, text_col).select(
-            seed(F.col("word")).alias("seq"), F.col("cnt")
+
+def _merge_pairs(merges) -> list[tuple[str, str]]:
+    """The ordered (left, right) pairs of a merge table: a trainer's
+    DataFrame (collected here — bounded by n_merges) or a pair list."""
+    if isinstance(merges, DataFrame):
+        rows = merges.orderBy("merge_idx").collect()
+        return [(r["left"], r["right"]) for r in rows]
+    return [(l, r) for l, r in merges]
+
+
+def _apply_merges(seq: Column, pairs, merged=operator.add) -> Column:
+    """A seeded sequence with every merge applied in order: the
+    block-aligned literal rewrite chain (module docstring)."""
+    for left, right in pairs:
+        seq = F.replace(
+            seq, F.lit(f" {left}  {right} "), F.lit(f" {merged(left, right)} ")
         )
+    return seq
+
+
+def _word_pieces(text_col: str, merges, level: str) -> Column:
+    """Per document, each word's BPE pieces: array<array<string>>."""
+    pairs = _merge_pairs(merges)
+    seed = _seed_expr(level)
+    return F.transform(
+        tokens_expr(text_col), lambda w: _symbols(_apply_merges(seed(w), pairs))
     )
-    # Truncate lineage every few rounds, not every round (r15): the
-    # eager per-round localCheckpoint was one full vocab-table job per
-    # merge — a stage barrier at cluster scale — while the thing it
-    # guards against (compounding analyzed-plan growth) only needs the
-    # chain BOUNDED. Rounds in between stay lazy on the last
-    # checkpoint: their collect does the (map-only, vocab-bounded)
-    # replace chain in the same job, and the chain never exceeds
-    # _CKPT_EVERY * batch literal rewrites. Results are identical —
-    # the rewrites applied are the same expressions in the same order.
-    anchor = prev  # the last checkpointed frame (owns blocks)
-    lazy_rounds = 0
-    while len(merges) < n_merges:
-        want = min(batch, n_merges - len(merges))
-        syms = F.split(F.trim(F.col("seq")), "  ")
-        top = (
-            prev.select(F.explode(_pairs_expr(syms)).alias("pair"), "cnt")
-            .groupBy("pair")
-            .agg(F.sum("cnt").alias("total"))
-            # tie-break on the (left, right) TUPLE, not the joined
-            # pair string — identical to ORDER BY (total DESC, l, r)
-            # in the SQL oracle regardless of symbol contents
-            .select(
-                F.split_part(F.col("pair"), F.lit("\x1f"), F.lit(1)).alias("l"),
-                F.split_part(F.col("pair"), F.lit("\x1f"), F.lit(2)).alias("r"),
-                "total",
-            )
-            .orderBy(F.col("total").desc(), F.col("l"), F.col("r"))
-            # overfetch so conflicts rarely starve a round; anything
-            # skipped is re-ranked (fresh counts) next round
-            .limit(want if want == 1 else 3 * want + 8)
-            .collect()
-        )
-        if not top:
-            break
-        used: set[str] = set()
-        selected: list[tuple[str, str, int]] = []
-        for row in top:
-            if len(selected) == want:
-                break
-            left, right = row["l"], row["r"]
-            if left in used or right in used:
-                continue
-            selected.append((left, right, int(row["total"])))
-            used.update((left, right, left + right))
-        # the top-ranked pair is always conflict-free, so every
-        # round selects >= 1 merge and the loop terminates
-        rewritten = F.col("seq")
-        for i, (left, right, total) in enumerate(selected):
-            merges.append((len(merges), left, right, total))
-            rewritten = F.replace(
-                rewritten,
-                F.lit(f" {left}  {right} "),
-                F.lit(f" {left}{right} "),
-            )
-        prev = prev.withColumn("seq", rewritten)
-        lazy_rounds += 1
-        if lazy_rounds >= _CKPT_EVERY and len(merges) < n_merges:
-            nxt = _truncate(prev)
-            # the new checkpoint is eager; the previous anchor's
-            # blocks are dead — release them now, not at the end
-            _release(anchor)
-            anchor = prev = nxt
-            lazy_rounds = 0
-    _release(anchor)
-    return spark.createDataFrame(merges, MERGES_SCHEMA)
 
 
 def bpe_segment_counts(
@@ -304,30 +297,14 @@ def bpe_segment_counts(
     Python, one corpus scan; the merge chain rides in the plan as
     literals.
     """
-    if isinstance(merges, DataFrame):
-        rows = merges.orderBy("merge_idx").collect()
-        pairs = [(r["left"], r["right"]) for r in rows]
-    else:
-        pairs = [(l, r) for l, r in merges]
-
-    seed = _seed_expr(level)
-
-    def _pieces(word: Column) -> Column:
-        acc = seed(word)
-        for left, right in pairs:
-            acc = F.replace(
-                acc, F.lit(f" {left}  {right} "), F.lit(f" {left}{right} ")
-            )
-        return F.size(F.split(F.trim(acc), "  ")).cast("bigint")
-
-    words = tokens_expr(text_col)
+    pieces = _word_pieces(text_col, merges, level)
     return df.select(
         F.col(id_col),
-        F.size(words).cast("bigint").alias("n_words"),
+        F.size(tokens_expr(text_col)).cast("bigint").alias("n_words"),
         F.aggregate(
-            F.transform(words, _pieces),
+            pieces,
             F.lit(0).cast("bigint"),
-            lambda a, x: a + x,
+            lambda a, x: a + F.size(x).cast("bigint"),
         ).alias("n_pieces"),
     )
 
@@ -355,24 +332,7 @@ def bpe_encode(
     deliberately not baked in here so the piece strings stay
     engine-replayable.
     """
-    if isinstance(merges, DataFrame):
-        rows = merges.orderBy("merge_idx").collect()
-        pairs = [(r["left"], r["right"]) for r in rows]
-    else:
-        pairs = [(l, r) for l, r in merges]
-
-    seed = _seed_expr(level)
-
-    def _segmented(word: Column) -> Column:
-        acc = seed(word)
-        for left, right in pairs:
-            acc = F.replace(
-                acc, F.lit(f" {left}  {right} "), F.lit(f" {left}{right} ")
-            )
-        return F.split(F.trim(acc), "  ")
-
-    words = tokens_expr(text_col)
     return df.select(
         F.col(id_col),
-        F.flatten(F.transform(words, _segmented)).alias("pieces"),
+        F.flatten(_word_pieces(text_col, merges, level)).alias("pieces"),
     )

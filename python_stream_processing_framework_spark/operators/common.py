@@ -110,11 +110,11 @@ def materialize(df: DataFrame) -> DataFrame:
 
 
 def checkpoint_truncate(df: DataFrame) -> DataFrame:
-    """Per-round lineage truncation for iterative loops (components,
-    BPE/WordPiece merge rounds, unigram EM): each round's plan would
-    otherwise chain on the previous round's FULL analyzed plan and
-    per-round planning cost compounds (measured ~2x per round past
-    round 9 in the bpe trainer). Durable `checkpoint` when the
+    """Per-round lineage truncation for iterative loops (connected
+    components): each round's plan would otherwise chain on the
+    previous round's FULL analyzed plan and per-round planning cost
+    compounds (measured ~2x per round past round 9 in the former
+    per-round BPE trainer). Durable `checkpoint` when the
     session has a checkpoint dir, else `localCheckpoint` — both
     eager, so the returned frame is a leaf."""
     durable = df.sparkSession.sparkContext.getCheckpointDir() is not None

@@ -370,7 +370,7 @@ def unigram_train(
             cached = _viterbi_counts(best).persist()
             total = cached.agg(F.sum("cnt")).head()[0]
             logp = _with_logp(cached, total=int(total))
-        # lineage truncation per round (the bpe_train discipline):
+        # lineage truncation per round:
         # each round's plan would otherwise chain on the previous
         # round's full analyzed plan
         vocab = logp.localCheckpoint(eager=True)

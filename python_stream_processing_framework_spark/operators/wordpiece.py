@@ -9,18 +9,18 @@ round merges the adjacent symbol pair maximizing the unigram-LM
 likelihood gain ``count(ab) / (count(a) * count(b))`` instead of the
 raw pair count, and word-internal continuation symbols carry the
 ``##`` prefix (merging (l, r) produces ``l + strip_##(r)``). The
-corpus collapses to a word-frequency table in ONE pass; every round
-after that is three vocabulary-bounded shuffles (pair count, symbol
-count, deterministic argmax) plus a literal block-aligned rewrite —
-the double-space sequence discipline and lineage-truncation loop are
-bpe.py's, unchanged.
+corpus collapses to a word-frequency table in ONE distributed pass;
+the trainer collects that table's seeded symbols once and runs
+bpe.py's shared driver-side merge loop with this score and merged
+form, so training is one Spark collect whatever the merge count.
 
 Score determinism contract: the rational score quantizes to
-``score_q = tdiv(count(ab) * 1e12, count(a) * count(b))`` — exact
-decimal(38,0) / HUGEINT arithmetic with truncating division, so the
-(score_q DESC, left, right) argmax is bit-identical in Spark and
-DuckDB (ties after quantization break lexicographically; the same
-one-quantization-then-exact pattern as unigram's nano log-probs).
+``score_q = (count(ab) * 1e12) // (count(a) * count(b))`` — exact
+integer arithmetic with truncating division, which DuckDB's HUGEINT
+``//`` reproduces, so the (score_q DESC, left, right) argmax is the
+one the SQL oracle replays (ties after quantization break
+lexicographically; the same one-quantization-then-exact pattern as
+unigram's nano log-probs).
 
 ENCODE is where WordPiece genuinely differs from BPE: the deployed
 tokenizer does NOT replay merges — it greedily takes the LONGEST
@@ -40,7 +40,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from python_stream_processing_framework_spark.operators.bpe import _pairs_expr
+from python_stream_processing_framework_spark.operators.bpe import (
+    _apply_merges,
+    _learn_merges,
+    _merge_pairs,
+    _symbols,
+)
 from python_stream_processing_framework_spark.operators.common import (
     maybe_broadcast,
 )
@@ -57,14 +62,6 @@ WP_MERGES_SCHEMA = (
 )
 
 _SCORE_SCALE = 10**12
-
-
-#: Lineage-truncation cadence for the training loops (r15): a
-#: localCheckpoint every N rounds bounds the replace chain at
-#: N*batch literal rewrites while cutting the per-round eager
-#: checkpoint jobs ~4x. 1 restores the old truncate-every-round
-#: behavior (tests pin identical merge tables either way).
-_CKPT_EVERY = 4
 
 
 def _wp_seq_expr(word: Column) -> Column:
@@ -90,726 +87,46 @@ def wordpiece_train(
     *,
     n_merges: int = 6,
     max_word_len: int = 16,
-    batch: int = 1,
-    rounds_out: list | None = None,
     words: DataFrame | None = None,
     merges_out: list | None = None,
 ) -> DataFrame:
     """Learn ``n_merges`` WordPiece merges; returns WP_MERGES_SCHEMA
     rows in application order. Stops early when no pair remains.
 
-    Scale shape: identical to bpe_train (whose loop this reuses
-    structurally) with one extra vocabulary-bounded shuffle per round
-    for the symbol counts the likelihood denominator needs; the
-    vocabulary re-checkpoints per round (lineage truncation) and dead
-    rounds release eagerly.
-
-    ``batch`` > 1 is the driver-latency scale knob (a real 30k-merge
-    vocabulary at batch=1 is 30k sequential driver round-trips): each
-    round collects the top-N scored pairs plus trigram-derived bounds
-    for the pairs a merge would mint, then replays up to ``batch``
-    sequential argmax steps DRIVER-SIDE, accepting exactly as many as
-    the collected evidence makes provable (see _accept_batch) — the
-    merge table is bit-identical to sequential selection on every
-    corpus, not an approximation. bpe.py's symbol-disjoint
-    commutation covers pair COUNTS but not WordPiece SCORES (a merge
-    moves the denominators of every pair touching either symbol and
-    mints new pairs around the merged symbol), and on a Zipf corpus
-    consecutive argmaxes CHAIN on the hot symbols ((b,##a), (c,##a),
-    (d,##a), ... — each merge shrinks count(##a) and boosts the whole
-    family), so a disjointness-only batch degenerates to 1
-    merge/round. The simulator rides the chain instead: counts of
-    same-left/same-right siblings are provably unchanged and their
-    denominators exactly tracked, so their post-merge scores are
-    EXACT; everything else (shrinking pairs, the uncollected tail,
-    minted pairs via trigram evidence) is upper-bounded, and the
-    batch stops at the first comparison that is not strict. Anything
-    rejected waits for the next round, so batch mode trades nothing:
-    merges/round >= 1 always, more whenever the corpus allows.
-    Parity is pinned by hypothesis tests (identical tables vs
-    batch=1 on random corpora) and the driver oracle replays the
-    batch=1 contract unchanged.
-
-    ``rounds_out`` (telemetry, optional): a list the trainer appends
-    one int per driver round — the number of merges that round
-    accepted — so harnesses can report merges/round-trip without
-    instrumenting the loop.
+    Scale shape: bpe_train's — one corpus pass to the word table, one
+    collect of its seeded symbols, then the shared driver-side merge
+    loop (bpe._learn_merges) scoring pairs by the quantized
+    likelihood gain. The Spark job count does not depend on
+    ``n_merges``.
 
     ``words``: an already-persisted word table (the
     unigram_word_table shape) to train from instead of deriving one
     here — lets a query that both trains AND segments share ONE
-    corpus pass (r15). Results are identical either way.
+    corpus pass. Results are identical either way.
 
-    ``merges_out`` (r16): a list the trainer appends each accepted
+    ``merges_out``: a list the trainer appends each accepted
     (left, right) pair to, in application order — the same pairs the
     returned DataFrame carries. Callers that feed the merges straight
     into :func:`wordpiece_vocab` (whose ``merges`` argument accepts a
-    pair list) can use it to skip re-collecting the local merge
-    DataFrame the trainer just built driver-side (one job)."""
+    pair list) can use it to skip re-collecting the merge DataFrame
+    the trainer just built driver-side."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if batch < 1:
-        raise ValueError(f"batch must be >= 1, got {batch}")
-    spark = df.sparkSession
-    from python_stream_processing_framework_spark.operators.common import (
-        checkpoint_truncate as _truncate,
-        release_checkpoint as _release,
-    )
-
-    merges: list[tuple[int, str, str, int, int]] = []
-    wt = (
+    learned = _learn_merges(
         words
         if words is not None
-        else unigram_word_table(df, text_col, max_word_len=max_word_len)
+        else unigram_word_table(df, text_col, max_word_len=max_word_len),
+        _wp_seq_expr,
+        n_merges,
+        # Python ints are exact: this is the oracle's HUGEINT `//`
+        score=lambda count, cl, cr: count * _SCORE_SCALE // (cl * cr),
+        merged=_merged_form,
     )
-    prev = _truncate(
-        wt.select(_wp_seq_expr(F.col("word")).alias("seq"), F.col("cnt"))
+    if merges_out is not None:
+        merges_out.extend((left, right) for left, right, _, _ in learned)
+    return df.sparkSession.createDataFrame(
+        [(i, *m) for i, m in enumerate(learned)], WP_MERGES_SCHEMA
     )
-    # Lineage truncation every few rounds instead of every round (r15,
-    # the bpe_train discipline): the eager per-round localCheckpoint
-    # was one vocab-table job per merge round; in-between rounds stay
-    # lazy on the last checkpoint — their collect folds the (map-only)
-    # replace chain into the same job, chain bounded by
-    # _CKPT_EVERY * batch rewrites. Identical results.
-    anchor = prev
-    lazy_rounds = 0
-    while len(merges) < n_merges:
-        want = min(batch, n_merges - len(merges))
-        syms = F.split(F.trim(F.col("seq")), "  ")
-        # ONE explode + ONE vocabulary-bounded aggregation per round
-        # (r16, guide §2.4): symbol occurrences and adjacent pairs
-        # ride the same shuffle, symbols tagged with a leading \x1f
-        # (symbols are non-empty, so a pair string — "l\x1fr" — can
-        # never start with \x1f). The r15 shape ran two separate
-        # explode + groupBy passes over the word table per merge
-        # round; counts are identical, this just removes one full
-        # explode pipeline and its exchange from every round.
-        both = (
-            prev.select(
-                F.explode(
-                    F.concat(
-                        F.transform(
-                            syms, lambda s: F.concat(F.lit("\x1f"), s)
-                        ),
-                        _pairs_expr(syms),
-                    )
-                ).alias("t"),
-                "cnt",
-            )
-            .groupBy("t")
-            .agg(F.sum("cnt").alias("c"))
-        )
-        if want > 1:
-            # batch mode reads the counts from several plans (both
-            # scored joins, the merged-form probe, the trigram-
-            # escalation join); lazily persisted, the top-collect
-            # action populates the blocks and the bounded follow-up
-            # collects read them instead of re-scanning prev
-            both = both.persist()
-        symcnt = both.filter(F.col("t").startswith("\x1f")).select(
-            F.expr("substring(t, 2)").alias("sym"), F.col("c")
-        )
-        pairs = (
-            both.filter(~F.col("t").startswith("\x1f"))
-            .select(
-                F.split_part(F.col("t"), F.lit("\x1f"), F.lit(1)).alias("l"),
-                F.split_part(F.col("t"), F.lit("\x1f"), F.lit(2)).alias("r"),
-                F.col("c").alias("total"),
-            )
-        )
-        num = F.col("total").cast("decimal(38,0)") * F.lit(_SCORE_SCALE)
-        den = F.col("_cl").cast("decimal(19,0)") * F.col("_cr").cast(
-            "decimal(19,0)"
-        )
-        scored = (
-            pairs.join(
-                symcnt.select(F.col("sym").alias("l"), F.col("c").alias("_cl")),
-                "l",
-            )
-            .join(
-                symcnt.select(F.col("sym").alias("r"), F.col("c").alias("_cr")),
-                "r",
-            )
-            # counts are positive, so trunc-div == the (a - a%d)/d
-            # identity == DuckDB HUGEINT `//`
-            .withColumn(
-                "score_q",
-                ((num - num % den) / den).cast("long"),
-            )
-        )
-        if want == 1:
-            accepted = [
-                (r["l"], r["r"], int(r["total"]), int(r["score_q"]))
-                for r in scored.orderBy(
-                    F.col("score_q").desc(), "l", "r"
-                )
-                .limit(1)
-                .collect()
-            ]
-        else:
-            # fold the merged-form count probe into the SAME rows the
-            # top collect brings back — it used to be its own driver
-            # job per round (r14 verdict #4)
-            mform = F.concat(
-                F.col("l"),
-                F.when(
-                    F.col("r").startswith("##"),
-                    F.expr("substring(r, 3)"),
-                ).otherwise(F.col("r")),
-            )
-            scored = scored.join(
-                symcnt.select(
-                    F.col("sym").alias("_msym"), F.col("c").alias("_cm")
-                ),
-                mform == F.col("_msym"),
-                "left",
-            ).drop("_msym")
-            # 128 floor: when the whole pair-type table fits (small
-            # corpora, late training), the collect covers it entirely
-            # and the uncollected-tail bound vanishes (tail = None) —
-            # measured the difference between 1.6 and 2+ merges/round
-            # on the Zipf bench corpus; at real vocabularies a
-            # TakeOrdered of 128 rows is the same job as 64
-            ncollect = max(128, 8 * want)
-            top = (
-                scored.orderBy(F.col("score_q").desc(), "l", "r")
-                .limit(ncollect)
-                .collect()
-            )
-            # each accepted tuple carries the EXACT score at its own
-            # sequential step (chain-accepted merges see boosted
-            # denominators, so the pre-round score_q would be wrong)
-            accepted = _accept_batch(
-                prev, symcnt, top, want, collected_cap=ncollect
-            )
-            both.unpersist()
-        if not accepted:
-            break
-        if rounds_out is not None:
-            rounds_out.append(len(accepted))
-        seq_col = F.col("seq")
-        for left, right, pc, sc in accepted:
-            merges.append((len(merges), left, right, pc, sc))
-            if merges_out is not None:
-                merges_out.append((left, right))
-            # ONE rewrite pass per batch: the replaces chain in
-            # acceptance order inside one column expression, so each
-            # pattern is applied to exactly the string state the
-            # sequential trainer would have had at its step —
-            # sequential application by construction
-            seq_col = F.replace(
-                seq_col,
-                F.lit(f" {left}  {right} "),
-                F.lit(f" {_merged_form(left, right)} "),
-            )
-        prev = prev.withColumn("seq", seq_col)
-        lazy_rounds += 1
-        if lazy_rounds >= _CKPT_EVERY and len(merges) < n_merges:
-            nxt = _truncate(prev)
-            _release(anchor)
-            anchor = prev = nxt
-            lazy_rounds = 0
-    _release(anchor)
-    return spark.createDataFrame(merges, WP_MERGES_SCHEMA)
-
-
-def _tri_expr(syms):
-    """Adjacent symbol TRIPLES as 'a<US>b<US>c' strings (every
-    occurrence) — the batched trainer's minted-pair evidence: each
-    post-merge occurrence of a pair involving a minted symbol traces
-    to exactly one pre-merge trigram through the merge site."""
-    n = F.size(syms)
-    return F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2),
-            lambda i: F.concat_ws(
-                "\x1f",
-                F.element_at(syms, i),
-                F.element_at(syms, i + 1),
-                F.element_at(syms, i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-#: optional diagnostics: when a list, _accept_batch appends one
-#: str per batch-stopping rejection ("tie"/"tail"/"minted"/
-#: "degenerate"/"exact") — the evidence SCALE.md quotes for why
-#: a corpus's rounds stop where they do. Never affects decisions.
-ACCEPT_DIAG: list | None = None
-
-
-#: "infinite" sentinel for minted-pair raw bounds whose exact decimal
-#: quotient would not fit the precision budget — the simulator treats
-#: any raw >= this as unbounded and stops the batch (conservative).
-_RAW_CAP = 10**24
-
-#: max extension rows _minted_raw_bounds collects for the exact
-#: driver-side judge; above it the distributed max-bound fallback
-#: runs instead (real-vocabulary rounds where a hot symbol has
-#: thousands of neighbors).
-_EVIDENCE_CAP = 4096
-
-
-def _cand_maps(cand):
-    """Per-candidate consumption bookkeeping shared by both minted-
-    bound tiers: dec_ub = total consumption of a symbol if EVERY
-    candidate touching it were accepted; right_pc / left_pc = the
-    smallest minted count a symbol could have been created with when
-    it is itself some candidate's merged site (see
-    _minted_raw_bounds)."""
-    dec_ub: dict[str, int] = {}
-    right_pc: dict[str, int] = {}
-    left_pc: dict[str, int] = {}
-    for left, right, pc in cand:
-        dec_ub[left] = dec_ub.get(left, 0) + (2 * pc if left == right else pc)
-        if left != right:
-            dec_ub[right] = dec_ub.get(right, 0) + pc
-        right_pc[right] = min(right_pc.get(right, pc), pc)
-        left_pc[left] = min(left_pc.get(left, pc), pc)
-    return dec_ub, right_pc, left_pc
-
-
-def _ext_raws(ext, cand):
-    """Shared tail of both minted-bound tiers: ``ext`` carries one
-    row per extension occurrence class (j, x, total, _cx, side) —
-    candidate index, extension symbol, numerator upper bound, the
-    extension symbol's pre-round count, and which side of the minted
-    symbol it extends. Returns {j: raw} with raw such that
-    score(pair touching m_j) <= raw // minted_count_j, _RAW_CAP
-    meaning unbounded."""
-    dec_ub, right_pc, left_pc = _cand_maps(cand)
-
-    def _map(d: dict):
-        args: list = []
-        for k in sorted(d):
-            args += [F.lit(k), F.lit(d[k])]
-        return F.create_map(*args)
-
-    dec_map, rpc_map, lpc_map = _map(dec_ub), _map(right_pc), _map(left_pc)
-    # the extension symbol's post-merge count lower bound: when x sits
-    # LEFT of a merge site it may itself have been minted from r_k
-    # (right_pc applies); RIGHT of a site, from l_k (left_pc)
-    den_plain = F.greatest(
-        F.lit(1).cast("long"),
-        F.col("_cx") - F.coalesce(_at_map(dec_map, "x"), F.lit(0)).cast("long"),
-    )
-    den = F.when(
-        F.col("side") == "L",
-        F.least(den_plain, F.coalesce(_at_map(rpc_map, "x").cast("long"), den_plain)),
-    ).otherwise(
-        F.least(den_plain, F.coalesce(_at_map(lpc_map, "x").cast("long"), den_plain))
-    )
-    n = F.col("total").cast("decimal(38,0)") * F.lit(_SCORE_SCALE)
-    d = den.cast("decimal(19,0)")
-    # 10**24 exceeds the long literal range: route through a string
-    cap = F.lit(str(_RAW_CAP)).cast("decimal(38,0)")
-    q = F.when((n - n % cap) / cap >= d, cap).otherwise((n - n % d) / d)
-    rows = (
-        ext.select("j", q.alias("q"))
-        .groupBy("j")
-        .agg(F.max("q").alias("q"))
-        .collect()
-    )
-    raws = {j: 0 for j in range(len(cand))}
-    for r in rows:
-        raws[int(r["j"])] = max(raws[int(r["j"])], int(r["q"]))
-    return raws
-
-
-def _minted_raw_bounds(prev, symcnt, cand):
-    """Per candidate j, sound upper bounds for the scores of pairs
-    involving j's minted symbol m_j, shaped so the simulator can
-    divide by the EXACT minted count at accept time:
-
-        score(any pair touching m_j at any later step)
-            <= raw_j // count(m_j)
-
-    Left-extension pairs (x, m_j) arise only at merge-j sites, one per
-    pre-merge trigram (x, l_j, r_j); right-extension (m_j, y) per
-    (l_j, r_j, y). Counts only shrink afterwards, so the pre-round
-    trigram count is an upper numerator. The extension symbol's
-    post-merge count is lower-bounded by count(x) - dec_ub(x) (dec_ub
-    = total consumption if EVERY candidate touching x were accepted)
-    and, when x is itself some candidate k's consumed symbol whose
-    site becomes m_k, by pc_k (the minted count) — the min of the two
-    is sound for both the plain and the minted-neighbor reading
-    ((m_k, m_j) cross pairs trace to trigrams (r_k, l_j, r_j), where
-    the x slot holds r_k). One vocabulary-bounded aggregation over
-    the trigram table restricted to the candidate pairs; <= 2 rows
-    per candidate come back. Returns ("rows", evidence) when the
-    extension row set fits _EVIDENCE_CAP — the driver then judges
-    minted pairs EXACTLY (_judge_minted) — else ("raws", bounds),
-    the distributed max-bound fallback."""
-    sep = "\x1f"
-    key_j = {f"{l}{sep}{r}": j for j, (l, r, _) in enumerate(cand)}
-
-    def _map(d: dict):
-        args: list = []
-        for k in sorted(d):
-            args += [F.lit(k), F.lit(d[k])]
-        return F.create_map(*args)
-    syms = F.split(F.trim(F.col("seq")), "  ")
-    keys = list(key_j)
-    jmap = _map(key_j)
-    # ONE filtered aggregation: the candidate-key filter sits on the
-    # grouping key's prefix/suffix, applied BEFORE the shuffle, and
-    # both extension sides derive from the same aggregated frame via
-    # an entry array — the previous lext/rext branches each re-ran
-    # the full trigram explode+aggregate (half of batch-mode's
-    # per-round wall at bench scale)
-    ab = F.concat_ws(sep, F.split_part(F.col("t"), F.lit(sep), F.lit(1)),
-                     F.split_part(F.col("t"), F.lit(sep), F.lit(2)))
-    bc = F.concat_ws(sep, F.split_part(F.col("t"), F.lit(sep), F.lit(2)),
-                     F.split_part(F.col("t"), F.lit(sep), F.lit(3)))
-    tri = (
-        prev.select(F.explode(_tri_expr(syms)).alias("t"), "cnt")
-        .filter(ab.isin(keys) | bc.isin(keys))
-        .groupBy("t")
-        .agg(F.sum("cnt").alias("total"))
-        .select(
-            F.split_part(F.col("t"), F.lit(sep), F.lit(1)).alias("a"),
-            F.split_part(F.col("t"), F.lit(sep), F.lit(2)).alias("b"),
-            F.split_part(F.col("t"), F.lit(sep), F.lit(3)).alias("c"),
-            "total",
-        )
-    )
-    sides = F.filter(
-        F.array(
-            F.when(
-                F.element_at(jmap, F.concat_ws(sep, "b", "c")).isNotNull(),
-                F.struct(
-                    F.element_at(jmap, F.concat_ws(sep, "b", "c")).alias("j"),
-                    F.col("a").alias("x"),
-                    F.lit("L").alias("side"),
-                ),
-            ),
-            F.when(
-                F.element_at(jmap, F.concat_ws(sep, "a", "b")).isNotNull(),
-                F.struct(
-                    F.element_at(jmap, F.concat_ws(sep, "a", "b")).alias("j"),
-                    F.col("c").alias("x"),
-                    F.lit("R").alias("side"),
-                ),
-            ),
-        ),
-        lambda e: e.isNotNull(),
-    )
-    exts = tri.select("total", F.explode(sides).alias("e")).select(
-        F.col("e.j").alias("j"),
-        F.col("e.x").alias("x"),
-        "total",
-        F.col("e.side").alias("side"),
-    )
-    ext = exts.join(
-        symcnt.select(F.col("sym").alias("x"), F.col("c").alias("_cx")),
-        "x",
-    )
-    # EXACT evidence when bounded: collect the per-extension rows so
-    # the driver can compute minted-pair scores exactly (they are
-    # exact trigram counts — see _judge_minted) instead of only
-    # max-bounds; above the cap, fall back to the distributed
-    # max-bound aggregation
-    rows = ext.limit(_EVIDENCE_CAP + 1).collect()
-    if len(rows) > _EVIDENCE_CAP:
-        return "raws", _ext_raws(ext, cand)
-    return "rows", [
-        (int(r["j"]), r["x"], int(r["total"]), int(r["_cx"]), r["side"])
-        for r in rows
-    ]
-
-
-
-
-def _judge_minted(rows, top, acc_idx, minted_cnt, dec, value, uv):
-    """Judge this step's argmax against the minted-pair mass using
-    the collected trigram evidence — EXACTLY where possible.
-
-    A minted pair's count is an exact pre-round trigram count when
-    nothing disturbs its sites: merging (l_j, r_j) -> m_j rewrites
-    every ``l_j r_j`` adjacency (block-aligned, no self-overlap for
-    l != r), so each post-merge ``(x, m_j)`` adjacency corresponds
-    one-to-one to a pre-merge trigram ``(x, l_j, r_j)`` — provided
-    the extension symbol x was not consumed or minted by ANY accepted
-    merge (x outside every accepted merge's symbol set) and merge j's
-    own sites were not clipped by another accepted merge (j's symbols
-    disjoint from every other accepted merge's). Under those
-    conditions cnt'(x) = pre-round count (untouched) and
-    cnt'(m_j) = pair_count_j, so the minted pair's sequential score
-    is computed exactly; every other extension row falls back to an
-    upper bound whose denominator uses the exactly-tracked actual
-    consumption (tighter than _ext_raws' all-candidates worst case,
-    which the distributed fallback must still assume).
-
-    Returns:
-    - "dominated": every minted score/bound is strictly below
-      ``value`` (lex-tie-break against exact ones) — the collected
-      candidate survives;
-    - (score, l, r, count): the lex-min highest-scoring EXACT minted
-      pair provably beats the collected winner, every other exact
-      minted pair, and every bound — it IS the sequential argmax
-      (the caller still checks the uncollected tail at this score);
-    - "stop": uncertain either way."""
-    acc_pos = {j: i for i, j in enumerate(acc_idx)}
-    touched: set = set()
-    for j in acc_idx:
-        touched.add(top[j]["l"])
-        touched.add(top[j]["r"])
-    disjoint = {}
-    for j in acc_idx:
-        mine = {top[j]["l"], top[j]["r"]}
-        others: set = set()
-        for j2 in acc_idx:
-            if j2 != j:
-                others.add(top[j2]["l"])
-                others.add(top[j2]["r"])
-        disjoint[j] = not (mine & others)
-    exacts = []  # (score, l, r, count)
-    max_bound = 0
-    for j, x, total, cx, side in rows:
-        pos = acc_pos.get(j)
-        if pos is None:
-            continue  # unaccepted candidate: no minted symbol exists
-        mc = minted_cnt[pos]
-        mk = _merged_form(top[j]["l"], top[j]["r"])
-        if disjoint[j] and x not in touched:
-            if cx <= 0:
-                continue
-            score = (total * _SCORE_SCALE) // (cx * mc)
-            l_, r_ = (x, mk) if side == "L" else (mk, x)
-            exacts.append((score, l_, r_, total))
-        else:
-            # unlike _ext_raws (which must assume EVERY candidate
-            # might be accepted), the judge knows the actual accepted
-            # set, so the denominator uses the exactly-tracked count:
-            # reading 1 — x survives with cnt'(x) = cx - dec(x);
-            # reading 2 — x was consumed into an accepted merge's
-            # minted symbol (the (m_k, m_j) cross pair), denominator
-            # count pc_k. The bound takes the worst (smallest) live
-            # denominator; a row with no live reading cannot form a
-            # pair at all.
-            dens = []
-            d1 = cx - dec.get(x, 0)
-            if d1 > 0:
-                dens.append(d1)
-            for j2, pos2 in acc_pos.items():
-                consumed_side = top[j2]["r"] if side == "L" else top[j2]["l"]
-                if consumed_side == x:
-                    dens.append(minted_cnt[pos2])
-            if not dens:
-                continue
-            max_bound = max(
-                max_bound, (total * _SCORE_SCALE) // (min(dens) * mc)
-            )
-    u, v = uv
-    if max_bound < value and all(
-        sc < value or (sc == value and (l_, r_) > (u, v))
-        for sc, l_, r_, _c in exacts
-    ):
-        return "dominated"
-    if not exacts:
-        return "stop"
-    exacts.sort(key=lambda e: (-e[0], e[1], e[2]))
-    v_m, ml, mr, mcount = exacts[0]
-    beats_collected = v_m > value or (v_m == value and (ml, mr) < (u, v))
-    if beats_collected and max_bound < v_m:
-        return (v_m, ml, mr, mcount)
-    return "stop"
-
-
-def _at_map(mp, col):
-    return F.element_at(mp, F.col(col))
-
-
-def _accept_batch(prev, symcnt, top, want, *, collected_cap):
-    """Exact batched acceptance: replay the sequential argmax
-    driver-side for as many steps as the collected evidence makes
-    PROVABLE, and stop at the first uncertain comparison. The output
-    is bit-identical to ``want`` sequential rounds' prefix — batching
-    trades driver round-trips, never semantics.
-
-    Why this works: merging (l_j, r_j) -> m_j (distinct symbols, the
-    block-aligned rewrite) changes the corpus state in fully
-    characterized ways —
-
-    - symbol counts: l_j and r_j each lose EXACTLY pair_count
-      occurrences (the pattern cannot self-overlap when l != r), m_j
-      gains exactly pair_count; every other symbol is untouched.
-    - a pair (u, v) keeps its count EXACTLY unless u == r_j (its u
-      may be consumed when preceded by l_j), v == l_j (consumed when
-      followed by r_j), (u, v) == (l_j, r_j) itself (drops to zero),
-      or a side is the minted m_j. In particular sharing only the
-      LEFT symbol with a merge's left (u == l_j, v != r_j) or only
-      the RIGHT with its right leaves the count untouched — which is
-      exactly the hot-symbol chain shape ((b,##a), (c,##a), (d,##a)
-      ...) a Zipf corpus produces.
-
-    So after any accepted set, a collected pair's score computed as
-    pre_count * S // (cnt'(u) * cnt'(v)) with exactly-tracked symbol
-    counts is EXACT when the count-preservation conditions hold
-    ("crownable") and a sound UPPER bound otherwise (counts only
-    shrink). A step's winner is accepted iff it is crownable and
-    strictly dominates (with exact lexicographic tie-breaks against
-    other exact values only):
-
-    - every other collected pair's value,
-    - the uncollected tail: any pair outside the collected top-N had
-      pre-score <= the N-th score; its score can only grow by
-      denominator shrink, bounded by (tail+1) * the two largest
-      count/count' boost ratios among touched symbols (dead symbols
-      with count' = 0 are excluded — pairs touching them have count'
-      0). When the whole pair table was collected there is no tail.
-    - minted pairs: judged from the trigram evidence
-      (_minted_raw_bounds). When the extension row set is bounded the
-      driver computes each minted pair's score EXACTLY
-      (_judge_minted) — a collected winner passes when every minted
-      score is strictly (or lex-) dominated, and when a minted pair
-      is itself the provable argmax it is ACCEPTED as the next merge
-      and the batch stops (the true Zipf chain t+##h -> th,
-      th+##e -> the, which a bound-only simulator can never follow).
-      Above _EVIDENCE_CAP rows the raw_j // minted_count_j max-bound
-      fallback applies, with raw >= _RAW_CAP treated as infinite.
-
-    Additional stop conditions keep every exactness precondition
-    honest: self-pair candidates (consumption not exact) and merged
-    forms colliding with a live symbol or an earlier minted form
-    (their pairs could GAIN count) are accepted only as the FIRST
-    merge of the round — where acceptance is definitionally
-    sequential — and end the batch. Stopping is always sound: the
-    next round re-derives the true state and sequential semantics
-    resume natively."""
-    if not top:
-        return []
-    a_rows = top
-    cand = [(r["l"], r["r"], int(r["total"])) for r in a_rows]
-    # merged-form counts ride the top rows themselves (the _cm column
-    # joined into `scored` — no per-round probe job)
-    cnt0 = {
-        _merged_form(r["l"], r["r"]): int(r["_cm"])
-        for r in a_rows
-        if r["_cm"] is not None
-    }
-    # LAZY minted evidence: the trigram aggregation is consulted
-    # only when a step-2+ candidate has already cleared the
-    # exactness/tie/tail checks — rounds that stop earlier never pay
-    # it. One aggregation per round at most (the box caches it).
-    ev_box: dict = {}
-
-    def _evidence():
-        if not ev_box:
-            ev_box["v"] = _minted_raw_bounds(prev, symcnt, cand)
-        return ev_box["v"]
-
-    tail = int(top[-1]["score_q"]) if len(top) == collected_cap else None
-
-    pre_cnt: dict[str, int] = {}
-    for r in top:
-        pre_cnt[r["l"]] = int(r["_cl"])
-        pre_cnt[r["r"]] = int(r["_cr"])
-    dec: dict[str, int] = {}
-    accepted: list = []
-    acc_idx: list[int] = []
-    minted_cnt: list[int] = []
-    minted_strings: set[str] = set()
-
-    def _cur(s: str) -> int:
-        return pre_cnt[s] - dec.get(s, 0)
-
-    def _tail_blocks(v: int) -> bool:
-        # exact max boost product over (ordered, with repetition)
-        # touched-symbol pairs — an uncollected pair can touch at
-        # most two touched symbols; dead symbols (count' 0) zero
-        # any pair touching them and are excluded
-        if tail is None:
-            return False
-        live = [(pre_cnt[s], _cur(s)) for s in dec if _cur(s) > 0]
-        best_ub = tail + 1  # no touched side: score unchanged
-        for n1, d1 in live:
-            for n2, d2 in live:
-                best_ub = max(best_ub, ((tail + 1) * n1 * n2) // (d1 * d2))
-            best_ub = max(best_ub, ((tail + 1) * n1) // d1)
-        return best_ub >= v
-
-    while len(accepted) < want:
-        vals = []  # (value, l, r, exact, idx)
-        for idx, p in enumerate(top):
-            if idx in acc_idx:
-                continue
-            u, v = p["l"], p["r"]
-            cu, cv = _cur(u), _cur(v)
-            if cu <= 0 or cv <= 0:
-                continue  # both bound and true count are 0
-            value = (int(p["total"]) * _SCORE_SCALE) // (cu * cv)
-            exact = all(
-                u != top[k]["r"] and v != top[k]["l"] for k in acc_idx
-            )
-            vals.append((value, u, v, exact, idx))
-        if not vals:
-            break
-        vals.sort(key=lambda t: (-t[0], t[1], t[2]))
-        value, u, v, exact, idx = vals[0]
-        first = not accepted
-        ok = exact
-        why = None if exact else "exact"
-        if len(vals) > 1 and vals[1][0] == value and not vals[1][3]:
-            ok = False  # tie with a mere bound: argmax uncertain
-            why = why or "tie"
-        if ok and not first and _tail_blocks(value):
-            ok = False
-            why = "tail"
-        minted_accept = None
-        if ok and not first:
-            kind, data = _evidence()
-            if kind == "raws":
-                for k, mc in zip(acc_idx, minted_cnt):
-                    raw = data[k]
-                    if raw >= _RAW_CAP or raw // mc >= value:
-                        ok = False
-                        why = "minted"
-                        break
-            else:
-                verdict = _judge_minted(
-                    data, top, acc_idx, minted_cnt, dec, value, (u, v)
-                )
-                if verdict != "dominated":
-                    ok = False
-                    why = "minted"
-                    if verdict != "stop":
-                        # a minted pair is the provable argmax of this
-                        # step — accept it as the next merge (it still
-                        # must clear the uncollected tail at its OWN
-                        # score) and end the batch: its second-
-                        # generation extensions have no evidence
-                        mv, ml, mr, mcount = verdict
-                        if not _tail_blocks(mv):
-                            minted_accept = (ml, mr, mcount, mv)
-        if not ok:
-            if minted_accept is not None:
-                accepted.append(minted_accept)
-                if ACCEPT_DIAG is not None:
-                    ACCEPT_DIAG.append("minted-accept")
-            elif ACCEPT_DIAG is not None and not first:
-                ACCEPT_DIAG.append(why)
-            break
-        m = _merged_form(u, v)
-        degenerate = (
-            u == v or cnt0.get(m, 0) > 0 or m in minted_strings
-        )
-        if degenerate and not first:
-            if ACCEPT_DIAG is not None:
-                ACCEPT_DIAG.append("degenerate")
-            break
-        pc = int(top[idx]["total"])
-        accepted.append((u, v, pc, value))
-        acc_idx.append(idx)
-        minted_cnt.append(pc)
-        minted_strings.add(m)
-        if degenerate:
-            break  # sequential-identical single step; state not exact
-        dec[u] = dec.get(u, 0) + pc
-        dec[v] = dec.get(v, 0) + pc
-    return accepted
 
 
 def wordpiece_vocab(
@@ -826,28 +143,16 @@ def wordpiece_vocab(
     corpus pass (the word table — or the caller's pre-built ``words``
     frame, shared with the other phases, r15), then map-only
     rewrites; output is vocabulary-bounded."""
-    pairs = _merge_pairs(merges)
-    seq = _wp_seq_expr(F.col("word"))
-    for left, right in pairs:
-        seq = F.replace(
-            seq,
-            F.lit(f" {left}  {right} "),
-            F.lit(f" {_merged_form(left, right)} "),
-        )
+    seq = _apply_merges(
+        _wp_seq_expr(F.col("word")), _merge_pairs(merges), _merged_form
+    )
     if words is None:
         words = unigram_word_table(df, text_col, max_word_len=max_word_len)
     return (
-        words.select(F.explode(F.split(F.trim(seq), "  ")).alias("piece"), "cnt")
+        words.select(F.explode(_symbols(seq)).alias("piece"), "cnt")
         .groupBy("piece")
         .agg(F.sum("cnt").alias("cnt"))
     )
-
-
-def _merge_pairs(merges) -> list[tuple[str, str]]:
-    if isinstance(merges, DataFrame):
-        rows = merges.orderBy("merge_idx").collect()
-        return [(r["left"], r["right"]) for r in rows]
-    return [(l, r) for l, r in merges]
 
 
 def greedy_segment(words: DataFrame, vocab: DataFrame) -> DataFrame:

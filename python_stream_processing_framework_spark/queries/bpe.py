@@ -107,9 +107,9 @@ def _merges_union(n_merges: int) -> str:
     """,
     doc="Distributed BPE vocabulary induction (Sennrich et al. 2016, "
     "operators/bpe.py): ONE corpus pass collapses the text to a "
-    "word-frequency table, then each of the 8 merge rounds runs two "
-    "vocabulary-bounded shuffles (weighted adjacent-pair count + "
-    "deterministic argmax) and a literal block-aligned rewrite — the "
+    "word-frequency table, collected once; the 8 merge rounds "
+    "(weighted adjacent-pair count, deterministic argmax, "
+    "left-to-right rewrite) run driver-side on that table — the "
     "corpus is never touched again. The oracle unrolls all 8 rounds "
     "in SQL and value-compares the full merge table (order, pairs, "
     "counts).",

@@ -155,8 +155,9 @@ def _greedy_ctes(n_merges: int, max_word_len: int = 16) -> str:
     "table, then each of the 6 rounds merges the pair maximizing the "
     "unigram likelihood gain count(ab)/(count(a)count(b)) — ranked "
     "by the quantized exact score (count*1e12) // (cl*cr), ties by "
-    "(left, right) — with ## continuation discipline; three "
-    "vocabulary-bounded shuffles per round, corpus never re-read. "
+    "(left, right) — with ## continuation discipline; the rounds "
+    "run driver-side on the once-collected word table, corpus never "
+    "re-read. "
     "The oracle unrolls all rounds and matches the full merge table "
     "(order, pair, count, score).",
 )

@@ -1,11 +1,26 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+
+
+def jobs_in(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-in-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status tracker reads what the listener bus has delivered
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

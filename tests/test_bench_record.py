@@ -74,7 +74,7 @@ def test_tail_safe_line_huge_catalog_still_fits(bench):
 _RATIO_STAGES = {
     "corpus_pipeline_10x": ("quality", "dedup", "decontaminate", "mixture", "packing"),
     "unigram_zipf": ("word_table_s", "train_s", "encode_s"),
-    "wordpiece_zipf": ("train_s", "per_merge_s", "train_batch8_s", "vocab_s", "encode_s"),
+    "wordpiece_zipf": ("train_s", "per_merge_s", "vocab_s", "encode_s"),
     "probe_dim768": ("train_s", "predict_s"),
     "charclf_zipf": ("train_s", "predict_s"),
     "spans_ratio": ("keep_first_mask_s", "maximal_spans_s"),

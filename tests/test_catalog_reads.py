@@ -7,34 +7,18 @@ job, while a rewrite of the path is inferred again.
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql.types import LongType, TimestampType
 
 from python_stream_processing_framework_spark.catalog import load
 from python_stream_processing_framework_spark.operators import common
 from python_stream_processing_framework_spark.operators.common import read_parquet
-from tests.conftest import SF_SMOKE
-
-
-def _jobs_in(spark, fn) -> int:
-    """Spark jobs submitted while ``fn`` runs, counted by job group."""
-    sc = spark.sparkContext
-    group = f"catalog-reads-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "catalog reads test")
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    # the status tracker reads what the listener bus has delivered
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import SF_SMOKE, jobs_in
 
 
 def test_reloading_an_unchanged_table_runs_no_job(spark):
     load(spark, SF_SMOKE, "events")
-    assert _jobs_in(spark, lambda: load(spark, SF_SMOKE, "events")[0].schema) == 0
+    assert jobs_in(spark, lambda: load(spark, SF_SMOKE, "events")[0].schema) == 0
 
 
 @pytest.mark.parametrize("writer", ["spark_overwrite", "single_file"])
@@ -55,7 +39,7 @@ def test_rewritten_path_is_inferred_again(spark, tmp_path, writer):
     df, schema = read_parquet(spark, path)
     assert schema.names == ["k"]
     assert sorted(r.k for r in df.collect()) == [1, 2]
-    assert _jobs_in(spark, lambda: read_parquet(spark, path)) == 0
+    assert jobs_in(spark, lambda: read_parquet(spark, path)) == 0
 
     write({"k": [3, 4, 5], "extra": ["x", "y", "z"]})
     df, schema = read_parquet(spark, path)

@@ -24,6 +24,7 @@ from python_stream_processing_framework_spark.operators.multimodal import (
 )
 from python_stream_processing_framework_spark.operators.routing import Router
 from python_stream_processing_framework_spark.operators.windows import split_late
+from tests.conftest import jobs_in
 
 
 def _ts(spark, rows, cols):
@@ -1516,47 +1517,37 @@ def test_bpe_greedy_left_and_consecutive(spark):
     assert seg[2] == 1
 
 
-def test_bpe_train_batched_classic_example(spark):
-    """Batched training on the Sennrich corpus: round 1 counts rank
-    (e,s)=9 < ... and selects the top symbol-disjoint pairs; the
-    merge table stays valid input to bpe_segment_counts and the
-    symbol-disjointness rule forbids (es,t) in the same round as
-    (e,s)."""
-    from python_stream_processing_framework_spark.operators.bpe import (
-        bpe_segment_counts,
-        bpe_train,
-    )
-
-    merges = bpe_train(_bpe_corpus(spark), "text", n_merges=5, batch=5).collect()
-    got = [(r["merge_idx"], r["left"], r["right"], r["pair_count"]) for r in merges]
-    assert len(got) == 5
-    assert [m[0] for m in got] == [0, 1, 2, 3, 4]
-    # round-1 ranking: (e,s) 9, then (es,t) BLOCKED mid-round (es not
-    # yet a symbol; s used), (s,t) 9 blocked (s used), (w,e) 8
-    # blocked? w,e free -> selected; (l,o) 7, (o,w) blocked (o,w? o
-    # free, w used) ... exact membership: first pair is always the
-    # sequential one
-    assert got[0] == (0, "e", "s", 9)
-    pairs_set = [(l, r) for _, l, r, _ in got]
-    assert len(set(pairs_set)) == 5  # no duplicate merges
-    assert all(c > 0 for *_, c in got)
-    # the learned table applies cleanly
-    seg = bpe_segment_counts(
-        _bpe_corpus(spark), "doc_id", "text", pairs_set
-    ).collect()
-    assert all(0 < r["n_pieces"] <= len("widest") for r in seg)
-
-
-def test_bpe_train_batched_deterministic_across_partitionings(spark):
+def test_bpe_train_partition_invariant(spark):
     from python_stream_processing_framework_spark.operators.bpe import bpe_train
 
     docs = _bpe_corpus(spark)
-    a = [tuple(r) for r in bpe_train(docs, "text", n_merges=6, batch=3).collect()]
+    a = [tuple(r) for r in bpe_train(docs.coalesce(1), "text", n_merges=6).collect()]
     b = [
         tuple(r)
-        for r in bpe_train(docs.repartition(7), "text", n_merges=6, batch=3).collect()
+        for r in bpe_train(docs.repartition(7), "text", n_merges=6).collect()
     ]
     assert a == b
+
+
+@pytest.mark.parametrize("trainer", ["bpe_char", "bpe_byte", "wordpiece"])
+def test_merge_trainers_job_count_is_flat_in_merges(spark, trainer):
+    """Training is one collect of the seeded word table plus a
+    driver-side merge loop: the Spark job count is small and the same
+    at 2 merges as at 32."""
+    from python_stream_processing_framework_spark.operators.bpe import bpe_train
+    from python_stream_processing_framework_spark.operators.wordpiece import (
+        wordpiece_train,
+    )
+
+    docs = _bpe_corpus(spark)
+    train = {
+        "bpe_char": lambda n: bpe_train(docs, "text", n_merges=n),
+        "bpe_byte": lambda n: bpe_train(docs, "text", n_merges=n, level="byte"),
+        "wordpiece": lambda n: wordpiece_train(docs, "text", n_merges=n),
+    }[trainer]
+    few, many = (jobs_in(spark, lambda n=n: train(n)) for n in (2, 32))
+    assert few == many
+    assert many <= 3
 
 
 def test_bpe_train_early_stop_degenerate(spark):

@@ -883,8 +883,8 @@ def test_unigram_viterbi_corpus_never_rejoined(spark):
 
 
 def test_unigram_train_rounds_lineage_truncated(spark):
-    """Each EM round checkpoints its vocabulary (the bpe_train
-    discipline): the returned frame must be a leaf — a plan that
+    """Each EM round checkpoints its vocabulary: the returned frame
+    must be a leaf — a plan that
     still chains the whole seed + EM lattice would compound per-round
     analysis cost at real merge counts."""
     from python_stream_processing_framework_spark.operators.unigram import (

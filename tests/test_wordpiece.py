@@ -6,7 +6,7 @@ semantics, UNK conventions, and determinism."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from python_stream_processing_framework_spark.operators.wordpiece import (
     greedy_segment,
@@ -90,18 +90,21 @@ def _ref_encode(word: str, vocab: set[str]):
 @settings(max_examples=6, deadline=None)
 @given(
     words=st.lists(
-        st.text(alphabet="ab", min_size=1, max_size=6),
+        st.text(alphabet="ab#\x1f", min_size=1, max_size=6),
         min_size=1,
         max_size=10,
     ),
     n_merges=st.integers(1, 4),
 )
-@pytest.mark.slow
+@example(words=["a\x1fb", "a\x1fb", "b\x1f"], n_merges=3)
 def test_wordpiece_matches_sequential_reference(spark, words, n_merges):
-    """Distributed trainer == sequential reference: identical merge
-    order, pairs, counts, and quantized scores; identical induced
-    vocabulary; identical greedy piece counts per word. The 'ab'
-    alphabet maximizes tie pressure on the score argmax."""
+    """Trainer == sequential reference: identical merge order, pairs,
+    counts, and quantized scores; identical induced vocabulary;
+    identical greedy piece counts per word. The small alphabet
+    maximizes tie pressure on the score argmax; '#' makes plain
+    symbols collide with ## continuation forms (the word '##' seeds
+    as ['#', '###'] and merges to the plain symbol '##'), and '\x1f'
+    is an ordinary character inside a symbol."""
     words = [w for w in words if w]
     if not words:
         words = ["a"]
@@ -211,223 +214,3 @@ def test_wordpiece_rejects_bad_params(spark):
     docs = spark.createDataFrame([(1, "a")], "doc_id int, text string")
     with pytest.raises(ValueError, match="n_merges"):
         wordpiece_train(docs, "text", n_merges=0)
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    words=st.lists(
-        st.text(alphabet="abc", min_size=1, max_size=6),
-        min_size=1,
-        max_size=14,
-    ),
-    n_merges=st.integers(1, 5),
-    batch=st.integers(2, 6),
-)
-@pytest.mark.slow
-def test_wordpiece_batch_is_bit_identical_to_sequential(
-    spark, words, n_merges, batch
-):
-    """batch>1 is latency, not semantics: the acceptance rule
-    (string-disjoint prefix + strict score dominance over a sound
-    bound on every boosted/minted score) guarantees the merge table
-    is IDENTICAL to the sequential trainer's on every corpus — the
-    'abc' alphabet plus random repetition stresses exactly the
-    failure modes (denominator boosts, freshly-minted pairs
-    outranking pre-round candidates, self-pairs, merged forms
-    colliding with live symbols)."""
-    words = [w for w in words if w] or ["a"]
-    docs = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(words)], "doc_id int, text string"
-    )
-    seq = [
-        tuple(r)
-        for r in wordpiece_train(docs, "text", n_merges=n_merges)
-        .orderBy("merge_idx")
-        .collect()
-    ]
-    got = [
-        tuple(r)
-        for r in wordpiece_train(
-            docs, "text", n_merges=n_merges, batch=batch
-        )
-        .orderBy("merge_idx")
-        .collect()
-    ]
-    assert got == seq, (words, n_merges, batch)
-
-
-def test_wordpiece_batch_reduces_driver_rounds(spark, monkeypatch):
-    """The point of batch mode: symbol-disjoint dominant merges land
-    in ONE driver round-trip. Two independent sub-corpora ('ab' words
-    and 'cd' words, equal shape) give two equal-score disjoint top
-    candidates; batch=4 must accept both in the first round. Rounds
-    are observed via the trainer's rounds_out telemetry (the
-    per-round checkpoint is no longer 1:1 with rounds — r15 truncates
-    lineage every few rounds, so it cannot serve as the proxy)."""
-    docs = spark.createDataFrame(
-        [(1, "ab ab ab cd cd cd")], "doc_id bigint, text string"
-    )
-    seq_rounds: list = []
-    seq = wordpiece_train(
-        docs, "text", n_merges=2, rounds_out=seq_rounds
-    ).collect()
-    batch_rounds: list = []
-    got = wordpiece_train(
-        docs, "text", n_merges=2, batch=4, rounds_out=batch_rounds
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, seq))
-    assert seq_rounds == [1, 1]
-    assert batch_rounds == [2]
-
-
-@pytest.mark.slow
-def test_wordpiece_batch_rejects_when_minted_pair_would_outrank(spark):
-    """The soundness half: merging the top pair can mint a pair a
-    rare neighbor makes dominant (score S/(cnt(x)*cnt(m))), which
-    sequential picks NEXT — a naive disjoint-prefix batch would
-    instead take the pre-round runner-up. 'xab' plants exactly that:
-    after (a, ##b) -> 'ab' merges, (##x-era) ... the rare '##a ##b'
-    context mints '##ab' pairs that outrank the 'cd' family. Batch
-    output must still equal sequential exactly."""
-    docs = spark.createDataFrame(
-        [(1, "ab ab ab ab ab ab xab cd cd")], "doc_id bigint, text string"
-    )
-    for n in (2, 3, 4):
-        seq = [
-            tuple(r)
-            for r in wordpiece_train(docs, "text", n_merges=n)
-            .orderBy("merge_idx")
-            .collect()
-        ]
-        got = [
-            tuple(r)
-            for r in wordpiece_train(docs, "text", n_merges=n, batch=4)
-            .orderBy("merge_idx")
-            .collect()
-        ]
-        assert got == seq, n
-
-
-def test_wordpiece_batch_rejects_bad_param(spark):
-    docs = spark.createDataFrame([(1, "a")], "doc_id int, text string")
-    with pytest.raises(ValueError, match="batch"):
-        wordpiece_train(docs, "text", batch=0)
-
-
-@settings(max_examples=6, deadline=None)
-@given(
-    words=st.lists(
-        st.text(alphabet="ab#", min_size=1, max_size=5),
-        min_size=1,
-        max_size=12,
-    ),
-    n_merges=st.integers(1, 4),
-    batch=st.integers(2, 6),
-)
-@pytest.mark.slow
-def test_wordpiece_batch_parity_with_hash_symbols(
-    spark, words, n_merges, batch
-):
-    """'#' in words makes PLAIN symbols collide with ## continuation
-    surface forms (the word '##' seeds as ['#', '###'], and a merge
-    of ('#', '###') mints '##' — a live plain symbol equal to the
-    continuation PREFIX), stressing every string-keyed map in the
-    batch simulator: merged forms, touched/minted lookups, trigram
-    keys. Batch output must still equal sequential bit-exactly."""
-    words = [w for w in words if w] or ["#"]
-    docs = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(words)], "doc_id int, text string"
-    )
-    seq = [
-        tuple(r)
-        for r in wordpiece_train(docs, "text", n_merges=n_merges)
-        .orderBy("merge_idx")
-        .collect()
-    ]
-    got = [
-        tuple(r)
-        for r in wordpiece_train(
-            docs, "text", n_merges=n_merges, batch=batch
-        )
-        .orderBy("merge_idx")
-        .collect()
-    ]
-    assert got == seq, (words, n_merges, batch)
-
-
-@pytest.mark.slow
-def test_wordpiece_batch_accepts_minted_chain(spark):
-    """r14 verdict #4: on the true Zipf chain the sequential argmax
-    sequence RUNS THROUGH minted symbols (t+##h -> th, then
-    th+##e -> the) — a bound-only simulator stops at 1 merge/round
-    forever. With exact trigram evidence the batch both (a) accepts
-    the minted pair when it provably wins and (b) proves collected
-    siblings past the minted mass. Pin: bit-identical table AND
-    strictly fewer rounds than merges (so multi-accept actually
-    happened), with at least one minted-accept recorded."""
-    import python_stream_processing_framework_spark.operators.wordpiece as wp
-
-    # 'the' dominates so (t,##h) then (th,##e) chain; 'other' words
-    # keep a candidate pool alive
-    docs = spark.createDataFrame(
-        [(1, " ".join(["the"] * 30 + ["they"] * 9 + ["then"] * 7
-                      + ["cat"] * 4 + ["dog"] * 3))],
-        "doc_id bigint, text string",
-    )
-    seq = [
-        tuple(r)
-        for r in wordpiece_train(docs, "text", n_merges=6)
-        .orderBy("merge_idx")
-        .collect()
-    ]
-    old_diag = wp.ACCEPT_DIAG
-    wp.ACCEPT_DIAG = diag = []
-    rounds: list = []
-    try:
-        got = [
-            tuple(r)
-            for r in wordpiece_train(
-                docs, "text", n_merges=6, batch=6, rounds_out=rounds
-            )
-            .orderBy("merge_idx")
-            .collect()
-        ]
-    finally:
-        wp.ACCEPT_DIAG = old_diag
-    assert got == seq
-    assert len(rounds) < 6, rounds  # multi-accept happened
-    assert "minted-accept" in diag, (rounds, diag)
-
-
-@pytest.mark.slow
-def test_ckpt_cadence_parity(spark, monkeypatch):
-    """The r15 lineage-truncation cadence (_CKPT_EVERY=4) must not
-    change any learned merge table: rounds between checkpoints stay
-    lazy on the last anchor, so the rewrites applied are the same
-    expressions in the same order. Pin bpe and wordpiece tables
-    against the old truncate-every-round behavior (_CKPT_EVERY=1)."""
-    from python_stream_processing_framework_spark.operators import (
-        bpe as bpe_mod,
-        wordpiece as wp_mod,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat"),
-            (2, "the thin cat ate the fat rat"),
-            (3, "a rat and a cat and a hat"),
-        ],
-        "doc_id bigint, text string",
-    )
-    wp_new = [tuple(r) for r in wordpiece_train(docs, "text", n_merges=7).collect()]
-    bpe_new = [
-        tuple(r) for r in bpe_mod.bpe_train(docs, "text", n_merges=7).collect()
-    ]
-    monkeypatch.setattr(wp_mod, "_CKPT_EVERY", 1)
-    monkeypatch.setattr(bpe_mod, "_CKPT_EVERY", 1)
-    wp_old = [tuple(r) for r in wordpiece_train(docs, "text", n_merges=7).collect()]
-    bpe_old = [
-        tuple(r) for r in bpe_mod.bpe_train(docs, "text", n_merges=7).collect()
-    ]
-    assert wp_new == wp_old
-    assert bpe_new == bpe_old
