@@ -56,9 +56,7 @@ from python_stream_processing_framework_spark.catalog import load
 from python_stream_processing_framework_spark.functions.vectors import l2_normalize
 from python_stream_processing_framework_spark.operators.ann_index import (
     build_ivf_index,
-    build_ivfpq_index,
     ivf_index_topk,
-    ivfpq_index_topk,
 )
 from python_stream_processing_framework_spark.operators.bpe import bpe_train
 from python_stream_processing_framework_spark.operators.charclf import (
@@ -1511,17 +1509,14 @@ def _streaming_chain(spark, sf_dir: str) -> dict:
 
 
 def _ann_recall_curve(spark, sf_dir: str) -> dict:
-    """Recall-vs-nprobe curve for BOTH persisted ANN layouts (r14
-    verdict #5): the knob evidence an operator needs at 100 TB —
-    IVF and IVF-PQ have recall tests at fixed probes, but choosing
-    nprobe in production means reading THIS curve. Builds each index
-    once, then sweeps nprobe over {1, 2, 4, 8, 16} with 8 query
-    vectors drawn from the corpus, reporting recall@10 against the
-    layout's own exact metric (IVF: exact cosine with the operator's
-    6-dp rounding + (cos DESC, id) ties; IVF-PQ: exact L2 — ADC
-    recall also absorbs quantization error, so it plateaus below 1.0
-    even at full probe; that plateau is the m/k codebook knob's
-    signal, not the nprobe knob's) and the min warmed per-query wall.
+    """Recall-vs-nprobe curve for the persisted IVF index: the knob
+    evidence an operator needs at 100 TB — the IVF index has recall
+    tests at fixed probes, but choosing nprobe in production means
+    reading THIS curve. Builds the index once, then sweeps nprobe
+    over {1, 2, 4, 8, 16} with 8 query vectors drawn from the corpus,
+    reporting recall@10 against exact cosine (with the operator's
+    6-dp rounding + (cos DESC, id) ties) and the min warmed per-query
+    wall.
     Ground truth is computed bench-side over the collected corpus
     (2k x 64 floats — evaluation data, not an operator path). It also
     covers the persisted-IVF serving path (partition-pruned probe
@@ -1537,7 +1532,6 @@ def _ann_recall_curve(spark, sf_dir: str) -> dict:
     q_ids = [int(i) for i in ids[:8]]
     queries = {qid: X[ids == qid][0] for qid in q_ids}
     true_cos: dict[int, set] = {}
-    true_l2: dict[int, set] = {}
     for qid, qv in queries.items():
         qn = np.linalg.norm(qv) or 1.0
         cos = (X @ qv) / (norms * qn)
@@ -1545,9 +1539,6 @@ def _ann_recall_curve(spark, sf_dir: str) -> dict:
             range(len(ids)), key=lambda i: (-round(float(cos[i]), 6), ids[i])
         )
         true_cos[qid] = {int(ids[i]) for i in order[:10]}
-        d2 = ((X - qv) ** 2).sum(axis=1)
-        order = sorted(range(len(ids)), key=lambda i: (float(d2[i]), ids[i]))
-        true_l2[qid] = {int(ids[i]) for i in order[:10]}
 
     tmp = tempfile.mkdtemp(prefix="ann-recall-")
     out: dict = {
@@ -1556,43 +1547,33 @@ def _ann_recall_curve(spark, sf_dir: str) -> dict:
         "k": 10,
         "k_cells": 32,
         "ivf": {},
-        "ivfpq": {},
     }
     try:
         _, out["ivf_build_s"] = _timed(
             lambda: build_ivf_index(embeddings, f"{tmp}/ivf", k=32, iters=2)
         )
-        _, out["ivfpq_build_s"] = _timed(
-            lambda: build_ivfpq_index(
-                embeddings, f"{tmp}/ivfpq", k=32, iters=2, pq_m=8, pq_k=16
-            )
-        )
         _release()
         for n_probe in (1, 2, 4, 8, 16):
-            for layout, topk, truth in (
-                ("ivf", ivf_index_topk, true_cos),
-                ("ivfpq", ivfpq_index_topk, true_l2),
-            ):
 
-                def query(qid):
-                    return topk(
-                        spark,
-                        f"{tmp}/{layout}",
-                        [float(x) for x in queries[qid]],
-                        k=10,
-                        n_probe=n_probe,
-                    ).collect()
+            def query(qid):
+                return ivf_index_topk(
+                    spark,
+                    f"{tmp}/ivf",
+                    [float(x) for x in queries[qid]],
+                    k=10,
+                    n_probe=n_probe,
+                ).collect()
 
-                query(q_ids[0])  # warm-up, uncounted (plan compile + FS listing)
-                hits, walls = 0, []
-                for qid in q_ids:
-                    got, wall = _timed(lambda: query(qid))
-                    walls.append(wall)
-                    hits += len({int(r["vec_id"]) for r in got} & truth[qid])
-                out[layout][str(n_probe)] = {
-                    "recall_at_10": round(hits / (10.0 * len(q_ids)), 3),
-                    "query_s": min(walls),
-                }
+            query(q_ids[0])  # warm-up, uncounted (plan compile + FS listing)
+            hits, walls = 0, []
+            for qid in q_ids:
+                got, wall = _timed(lambda: query(qid))
+                walls.append(wall)
+                hits += len({int(r["vec_id"]) for r in got} & true_cos[qid])
+            out["ivf"][str(n_probe)] = {
+                "recall_at_10": round(hits / (10.0 * len(q_ids)), 3),
+                "query_s": min(walls),
+            }
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out

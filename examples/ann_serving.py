@@ -1,7 +1,7 @@
 """Vector-serving demo: train a persisted IVF index once, keep it
 fresh from a stream, answer queries with partition-pruned probes.
 
-The serving shape a retrieval deployment runs (FAISS-IVFPQ style, on
+The serving shape a retrieval deployment runs (FAISS-IVF style, on
 Spark + parquet instead of a vector-DB daemon):
 
 1. `build_ivf_index` — pay deterministic k-means once, lay the corpus
@@ -12,9 +12,6 @@ Spark + parquet instead of a vector-DB daemon):
 3. `ivf_index_topk` — driver-side codebook probe, then a scan that
    partition-prunes to the probed cells: at 1024 cells / 8 probes a
    query reads <1% of the corpus, no shuffle.
-4. The IVF-PQ variant (`build_ivfpq_index` / `ivfpq_index_topk`)
-   serves entirely off m-byte PQ codes — the float corpus never
-   loads on the query path.
 
 Run: python examples/ann_serving.py
 """
@@ -38,9 +35,7 @@ from pyspark.sql.types import (
 from python_stream_processing_framework_spark.catalog import load
 from python_stream_processing_framework_spark.operators.ann_index import (
     build_ivf_index,
-    build_ivfpq_index,
     ivf_index_topk,
-    ivfpq_index_topk,
 )
 from python_stream_processing_framework_spark.session import get_spark
 from python_stream_processing_framework_spark.streaming import Stream
@@ -75,14 +70,6 @@ def main() -> None:
     print("IVF top-5 (expect 7 and 900001 tied at cos 1.0):")
     for r in top:
         print(f"  vec {r['vec_id']:>7}  cos {r['cos_sim']}")
-
-    # --- the codes-only variant
-    idx2 = f"{work}/ivfpq"
-    build_ivfpq_index(emb, idx2, k=8, iters=2, pq_m=4, pq_k=16)
-    top_pq = ivfpq_index_topk(spark, idx2, query_vec, k=3, n_probe=3).collect()
-    print("IVF-PQ top-3 by ADC distance (codes-only scan):")
-    for r in top_pq:
-        print(f"  vec {r['vec_id']:>7}  adc {r['adc_dist']}")
 
 
 if __name__ == "__main__":

@@ -159,210 +159,6 @@ def ivf_index_topk(
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
-def build_ivfpq_index(
-    embeddings: DataFrame,
-    index_path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int | None = None,
-    iters: int = 2,
-    pq_m: int = 4,
-    pq_k: int = 16,
-) -> dict:
-    """Train + lay out an IVF-PQ index: the ``build_ivf_index`` coarse
-    layout, but the per-cell payload is PQ CODES (m small ints per
-    vector) instead of float vectors — 32-512x smaller on disk, so a
-    probe's pruned scan reads codes, never the corpus. Adds
-    ``pq_codebook/`` (m*k centroid rows, metadata-sized) next to the
-    coarse ``centroids/``. The float corpus is not stored in the
-    index at all; queries run entirely off codes + codebooks, the
-    FAISS-IVFPQ serving shape."""
-    from python_stream_processing_framework_spark.operators.pq import (
-        pq_encode,
-        pq_train,
-    )
-    from python_stream_processing_framework_spark.operators.semdedup import (
-        cluster_assign,
-    )
-
-    nonnull = embeddings.filter(F.col(vec_col).isNotNull())
-    assign, cb = cluster_assign(
-        nonnull, id_col=id_col, vec_col=vec_col, k=k, iters=iters
-    )
-    cb.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    pq_cb = pq_train(
-        nonnull, id_col=id_col, vec_col=vec_col, m=pq_m, k=pq_k, iters=iters
-    )
-    pq_cb.write.mode("overwrite").parquet(f"{index_path}/pq_codebook")
-    codes = pq_encode(nonnull, pq_cb, id_col=id_col, vec_col=vec_col).join(
-        assign, id_col
-    ).withColumnRenamed("cluster", "cluster_id")
-    (
-        codes.repartition(F.col("cluster_id"))
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(f"{index_path}/codes")
-    )
-    spark = embeddings.sparkSession
-    # parquet-footer count of what was written, not a second
-    # encode+join scan of the corpus
-    n = spark.read.parquet(f"{index_path}/codes").count()
-    k_cells = cb.select("code").distinct().count()
-    meta = {
-        "n_vectors": n,
-        "k_cells": k_cells,
-        "pq_m": pq_m,
-        "id_col": id_col,
-        "vec_col": vec_col,
-    }
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{index_path}/meta")
-    return meta
-
-
-def ivfpq_index_topk(
-    spark: SparkSession,
-    index_path: str,
-    query_vec: list[float],
-    *,
-    k: int = 10,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k by ADC distance from a persisted IVF-PQ index: the same
-    driver-side coarse probe as ``ivf_index_topk``, then a
-    partition-PRUNED scan of the probed cells' CODES joined against
-    the broadcast m*k ADC lookup table (operators/pq.pq_topk) — the
-    query never touches a float corpus vector. Returns (id, adc_dist)
-    ascending, ties on id."""
-    from python_stream_processing_framework_spark.operators.pq import pq_topk
-
-    probes = _probe_cells(spark, index_path, query_vec, n_probe)
-    pq_cb = spark.read.parquet(f"{index_path}/pq_codebook")
-    codes = spark.read.parquet(f"{index_path}/codes").filter(
-        F.col("cluster_id").isin(probes)
-    )
-    return pq_topk(codes, pq_cb, query_vec, id_col=id_col, k=k)
-
-
-def ivf_index_stats(spark: SparkSession, index_path: str) -> dict:
-    """Health stats for a persisted IVF / IVF-PQ index — the
-    measurement behind ``append_to_ivf_index``'s "rebuild when
-    batch-dir count or cell drift degrades probes" guidance (r12
-    verdict #2). Everything comes from partition metadata and one
-    column-pruned aggregate over the partition columns (batch,
-    cluster_id): no vector or code bytes are read, so this is safe
-    to run on every maintenance tick at any corpus size.
-
-    Returns a dict:
-
-    - ``k_cells``: trained cells (centroid codebook rows).
-    - ``batch_dirs``: distinct ``batch=`` partitions. Every
-      streaming append adds one; each adds a directory listing to
-      every probe's pruned scan.
-    - ``n_base`` / ``n_appended``: vectors from the build vs from
-      appends.
-    - ``empty_cells``: trained cells with no vectors at all.
-    - ``max_cell`` / ``imbalance_ratio``: largest cell and its ratio
-      to the mean (n_total / k_cells) — a probe's worst-case scan is
-      proportional to the cells it probes, so a ballooning max cell
-      is a latency tail. ``base_imbalance_ratio`` is the same ratio
-      over the build-time layout, the baseline to compare against.
-    - ``append_drift_tv_ppm``: total-variation distance (integer
-      ppm) between the build's distribution over cells and the
-      appends' — 0 means arrivals land exactly where training data
-      did; 1e6 means they all pile into cells the build never used.
-      None when nothing was appended.
-
-    Rebuild guidance (measured in SCALE.md "IVF append drift"): the
-    pruned-probe layout stays healthy while appends follow the
-    trained distribution. Rebuild (build to a fresh path, swap) when
-    ``append_drift_tv_ppm`` exceeds ~300_000 — at that point a
-    drifted arrival cluster is likely split across cells or piled
-    into one, and measured n_probe=1 recall on drifted queries
-    degrades until a retrain gives the new mass its own centroid —
-    or when ``imbalance_ratio`` grows to a small multiple (~3x) of
-    ``base_imbalance_ratio``, or ``batch_dirs`` passes the point
-    where listing dominates probe latency (O(100) on object
-    stores)."""
-    try:
-        df = spark.read.parquet(f"{index_path}/vectors")
-    except AnalysisException:
-        # IVF-PQ codes layout: no batch= level (appends go to the
-        # float-vector index only) — everything is the build
-        df = spark.read.parquet(f"{index_path}/codes").withColumn(
-            "batch", F.lit("base")
-        )
-    per = {
-        (str(r["batch"]), int(r["cluster_id"])): int(r["n"])
-        for r in df.groupBy("batch", "cluster_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    # the trained cell universe is the codebook's ACTUAL code values
-    # (k-means can converge with fewer live cells than requested, and
-    # codes are not guaranteed to be 0..k-1)
-    codes = [
-        int(r["code"])
-        for r in spark.read.parquet(f"{index_path}/centroids")
-        .select("code")
-        .distinct()
-        .collect()
-    ]
-    k_cells = len(codes)
-    base: dict[int, int] = {}
-    appended: dict[int, int] = {}
-    batches = set()
-    for (b, c), n in per.items():
-        batches.add(b)
-        (base if b == "base" else appended)[c] = (
-            (base if b == "base" else appended).get(c, 0) + n
-        )
-    n_base, n_app = sum(base.values()), sum(appended.values())
-    totals = {c: base.get(c, 0) + appended.get(c, 0) for c in codes}
-    n_total = n_base + n_app
-    mean = n_total / k_cells if k_cells else 0.0
-    max_cell = max(totals.values(), default=0)
-    max_base = max((base.get(c, 0) for c in codes), default=0)
-    drift = None
-    if n_app:
-        if not n_base:
-            # appended batches with an empty/missing base partition
-            # (e.g. a build that crashed after centroids/ landed):
-            # disjoint-by-convention, the token_drift R=0 rule —
-            # never a ZeroDivisionError inside the health check
-            drift = 1_000_000
-        else:
-            cells = set(base) | set(appended)
-            drift = int(
-                round(
-                    500_000
-                    * sum(
-                        abs(
-                            base.get(c, 0) / n_base
-                            - appended.get(c, 0) / n_app
-                        )
-                        for c in cells
-                    )
-                )
-            )
-    return {
-        "k_cells": k_cells,
-        "batch_dirs": len(batches),
-        "n_base": n_base,
-        "n_appended": n_app,
-        "empty_cells": sum(1 for v in totals.values() if v == 0),
-        "max_cell": max_cell,
-        "imbalance_ratio": (max_cell / mean) if mean else 0.0,
-        "base_imbalance_ratio": (
-            max_base / (n_base / k_cells) if n_base and k_cells else 0.0
-        ),
-        "append_drift_tv_ppm": drift,
-    }
-
-
 def assign_to_index_cells(
     spark: SparkSession,
     index_path: str,

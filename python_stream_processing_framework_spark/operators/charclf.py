@@ -96,31 +96,6 @@ def _char_grams_expr(text_col: str, n: int) -> Column:
     )
 
 
-def charclf_features(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    n_buckets: int = 4_096,
-) -> DataFrame:
-    """(id, bucket, cnt): hashed char-n-gram bag rows, one corpus
-    scan. Zero-gram documents (blank or all-short tokens) contribute
-    no rows — :func:`charclf_predict` restores their row from the
-    prior alone."""
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    return (
-        df.select(
-            F.col(id_col),
-            F.explode(_char_grams_expr(text_col, n)).alias("_g"),
-        )
-        .select(id_col, hash28_mod(F.col("_g"), n_buckets).alias("bucket"))
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-
-
 def charclf_train(
     df: DataFrame,
     id_col: str,
@@ -146,45 +121,23 @@ def charclf_train(
         persist_lazy,
     )
 
-    # multinomial counts: one explode -> (label, bucket) groupBy,
-    # partial-aggregated map-side; output <= |labels| * n_buckets.
-    # MATERIALIZED (bounded rows, never corpus mass): the model frame
-    # fans out into totals/observed/dense here and again into the
-    # meta collect + wide pivot + broadcast probe in charclf_predict —
-    # unpersisted, each consumer re-ran the corpus explode (measured
-    # 3x the training scan in the charclf_predict build; r15
-    # optimization pass, guide §2.4 "remove shuffles outright").
-    counts = materialize(
-        labeled.select(
-            "label", F.explode(_char_grams_expr("_text", n)).alias("_g")
-        )
-        .select("label", hash28_mod(F.col("_g"), n_buckets).alias("bucket"))
-        .groupBy("label", "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    # per-label gram totals + doc counts: bounded aggregates. The
-    # label set comes from DOC counts, not gram counts — a label all
-    # of whose docs are zero-gram still owns unseen + prior rows
-    # (t = 0, pure smoothing)
-    # doc counts persisted too (|labels| rows): consumed by totals,
+    # per-label doc counts: a bounded aggregate. The label set comes
+    # from DOC counts, not gram counts — a label all of whose docs
+    # are zero-gram still owns unseen + prior rows (t = 0, pure
+    # smoothing). Persisted (|labels| rows): consumed by totals,
     # prior, AND the corpus-size scalar below — one label-column scan
-    # instead of three (r15 optimization pass). LAZY: the n_docs
-    # aggregate below is the populating action; materialize's eager
-    # count was a duplicate job.
+    # instead of three. LAZY: the n_docs aggregate below is the
+    # populating action; materialize's eager count was a duplicate job.
     doc_counts = persist_lazy(
         labeled.groupBy("label").agg(
             F.count(F.lit(1)).cast("bigint").alias("nd")
         )
     )
-    totals = (
-        doc_counts.select("label")
-        .join(counts.groupBy("label").agg(F.sum("c").alias("t")), "label", "left")
-        .select("label", F.coalesce(F.col("t"), F.lit(0)).alias("t"))
-    )
     # the NULL-label refusal rides the SAME one-row aggregate as the
-    # corpus-size scalar (r16, guide §5): the previous entry probe
-    # (filter(isNull).limit(1).count()) was a full extra corpus scan
-    # whenever no null exists — the common case. doc_counts groups
+    # corpus-size scalar (a separate filter(isNull).limit(1).count()
+    # probe would be a full extra corpus scan whenever no null exists —
+    # the common case), and runs BEFORE the corpus explode below, so
+    # bad input fails before any corpus-scale work. doc_counts groups
     # NULL labels like any other value, so their doc mass is visible
     # here; on the happy path doc_counts carries no NULL row and the
     # downstream consumers are unchanged.
@@ -194,8 +147,7 @@ def charclf_train(
     ).head()
     n_docs = stats["n"] or 0
     if stats["n_null"] or n_docs == 0:
-        # refused input releases the caches this call filled
-        counts.unpersist()
+        # refused input releases the cache this call filled
         doc_counts.unpersist()
         raise ValueError(
             "charclf_train: NULL labels in the training frame — "
@@ -204,6 +156,26 @@ def charclf_train(
             if stats["n_null"]
             else "charclf_train: empty training frame"
         )
+    # multinomial counts: one explode -> (label, bucket) groupBy,
+    # partial-aggregated map-side; output <= |labels| * n_buckets.
+    # MATERIALIZED (bounded rows, never corpus mass): the model frame
+    # fans out into totals/observed/dense here and again into the
+    # meta collect + wide pivot + broadcast probe in charclf_predict —
+    # unpersisted, each consumer re-ran the corpus explode (measured
+    # 3x the training scan in the charclf_predict build).
+    counts = materialize(
+        labeled.select(
+            "label", F.explode(_char_grams_expr("_text", n)).alias("_g")
+        )
+        .select("label", hash28_mod(F.col("_g"), n_buckets).alias("bucket"))
+        .groupBy("label", "bucket")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    totals = (
+        doc_counts.select("label")
+        .join(counts.groupBy("label").agg(F.sum("c").alias("t")), "label", "left")
+        .select("label", F.coalesce(F.col("t"), F.lit(0)).alias("t"))
+    )
     # dense (observed bucket) x (label) grid: a bucket one class saw
     # must carry every OTHER class's smoothed zero-count weight too,
     # or serving would need per-label unseen fallbacks bucket-wise
@@ -291,8 +263,8 @@ def charclf_predict(
             "charclf_predict: model table is missing its sentinel "
             "rows (bucket -1/-2 per label) — not a charclf_train output?"
         )
-    # raw gram rows, NOT charclf_features: the (id, bucket) pre-agg
-    # would spend a corpus shuffle the per-id groupBy below already
+    # raw gram rows, not an (id, bucket) pre-aggregate: that would
+    # spend a corpus shuffle the per-id groupBy below already
     # pays for (its map-side partials absorb repeated grams).
     # explode_OUTER (r16, guide §2.4): a zero-gram doc keeps one
     # NULL-bucket row, so the per-id aggregate below covers EVERY doc

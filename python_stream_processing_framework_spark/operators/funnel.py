@@ -31,19 +31,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def funnel_users(
+def _funnel_levels(
     events: DataFrame,
     user_col: str,
     ts_col: str,
     type_col: str,
     steps: list[str],
-    *,
-    horizon_ms: int | None = None,
-) -> DataFrame:
-    """Per-user completion times for the FULL funnel: (user, t1_ms ..
-    tk_ms) — one row per user who completed every step in order.
-    Intermediate frames (users who stalled at step j) are what
-    `funnel_stats` counts."""
+    horizon_ms: int | None,
+) -> list[DataFrame]:
+    """One frame per funnel level: level i is (user, t1_ms .. ti_ms),
+    one row per user who completed steps 1..i in order. Each level
+    derives from the previous one, never from a from-scratch prefix
+    rerun; users who stalled at step j are what `funnel_stats`
+    counts."""
     if len(steps) < 1:
         raise ValueError("steps must name at least one event type")
     cur = (
@@ -51,6 +51,7 @@ def funnel_users(
         .groupBy(user_col)
         .agg(F.min(F.unix_millis(F.col(ts_col))).alias("t1_ms"))
     )
+    levels = [cur]
     for i, step in enumerate(steps[1:], start=2):
         prev = f"t{i - 1}_ms"
         nxt = events.filter(F.col(type_col) == step).select(
@@ -65,7 +66,8 @@ def funnel_users(
         cur = joined.groupBy(user_col).agg(
             *carried, F.min("_ts").alias(f"t{i}_ms")
         )
-    return cur
+        levels.append(cur)
+    return levels
 
 
 def funnel_stats(
@@ -82,32 +84,7 @@ def funnel_stats(
     the step under the ordered rule and total_lag_ms the exact sum of
     their hop latencies from the previous step (0 for step 1). All
     BIGINT; engine-exact."""
-    if len(steps) < 1:
-        raise ValueError("steps must name at least one event type")
-    # build each level ONCE (funnel_users' loop, shared): level i's
-    # frame derives from level i-1, not a from-scratch prefix rerun
-    levels = []
-    cur = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(F.unix_millis(F.col(ts_col))).alias("t1_ms"))
-    )
-    levels.append(cur)
-    for i, step in enumerate(steps[1:], start=2):
-        prev = f"t{i - 1}_ms"
-        nxt = events.filter(F.col(type_col) == step).select(
-            user_col, F.unix_millis(F.col(ts_col)).alias("_ts")
-        )
-        joined = nxt.join(cur, [user_col]).filter(F.col("_ts") > F.col(prev))
-        if horizon_ms is not None:
-            joined = joined.filter(
-                F.col("_ts") <= F.col(prev) + F.lit(int(horizon_ms))
-            )
-        carried = [F.min(f"t{j}_ms").alias(f"t{j}_ms") for j in range(1, i)]
-        cur = joined.groupBy(user_col).agg(
-            *carried, F.min("_ts").alias(f"t{i}_ms")
-        )
-        levels.append(cur)
+    levels = _funnel_levels(events, user_col, ts_col, type_col, steps, horizon_ms)
     out = None
     for i, frame in enumerate(levels, start=1):
         lag = (
@@ -211,7 +188,7 @@ def funnel_fold(
     *,
     horizon_ms: int | None = None,
 ):
-    """(fold, init) reproducing funnel_users' earliest-valid-next
+    """(fold, init) reproducing _funnel_levels' earliest-valid-next
     state per user. State: {"t": [t1_ms..tk_ms], None = step not
     reached}. In ascending event-time order each t_i is set at most
     once (the first qualifying event is the minimum), which is why

@@ -450,24 +450,6 @@ def score_backoff_lm(
     )
 
 
-def lm_filter(
-    df: DataFrame,
-    scored: DataFrame,
-    id_col: str,
-    *,
-    min_avg_lp: float,
-) -> DataFrame:
-    """Keep documents whose mean log-prob clears the floor.
-
-    The CCNet keep-rule: documents too surprising to the trusted LM
-    (avg_lp below the threshold — including NULL-scored empty docs)
-    are dropped. Join is an equi semi-join on the id; the scored frame
-    carries only (id, score), never text, so at 100 TB the join sides
-    are id-width."""
-    keep = scored.filter(F.col("avg_lp") >= F.lit(float(min_avg_lp))).select(id_col)
-    return df.join(keep, [id_col], "left_semi")
-
-
 def perplexity_buckets(
     scored: DataFrame,
     group_col: str,

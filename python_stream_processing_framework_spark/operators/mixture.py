@@ -49,7 +49,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from python_stream_processing_framework_spark.operators.sampling import (
-    HASH_SPACE,
     _unit_hash,
 )
 

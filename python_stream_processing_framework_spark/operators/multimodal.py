@@ -25,7 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -135,179 +134,6 @@ def decode_images(
             )
 
     return df.select(id_col, payload_col).mapInPandas(decode, DECODED_META_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", LongType()),
-        StructField("frame_bytes", BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    *,
-    frame_size: int = 1000,
-    stride: int = 2,
-) -> DataFrame:
-    """Frame-sample a binary payload (video stand-in): split into
-    fixed-size chunks, keep every `stride`-th. One-to-many mapInPandas —
-    the output partitioning stays aligned with the input (no shuffle);
-    a real ffmpeg-based sampler drops in at the chunking step.
-    """
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            frames: list[bytes] = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                chunks = [
-                    payload[i : i + frame_size]
-                    for i in range(0, len(payload), frame_size)
-                ]
-                for j, chunk in enumerate(chunks[::stride]):
-                    ids.append(int(doc_id))
-                    idxs.append(j)
-                    frames.append(bytes(chunk))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame_bytes": frames,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(sample, FRAME_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("resized_bytes", BinaryType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    *,
-    width: int = 224,
-    height: int = 224,
-    decode_stub: Literal["fake", "raise", "pil"] = "fake",
-) -> DataFrame:
-    """Resize binary image payloads to a fixed (width, height) via
-    mapInPandas — the preprocessing step every vision-model pipeline
-    runs before feature extraction.
-
-    ``"pil"`` decodes, bilinear-resizes, and re-encodes PNG with real
-    Pillow (optional-import, checked at plan time like decode_images).
-    ``"fake"`` (default) emits a deterministic stand-in — the payload
-    md5 digest bytes cycled to exactly width*height bytes — so batch
-    shape, schema, and output sizing are production-shaped without a
-    codec. ``"raise"`` documents the hole loudly. Map-only: output
-    partitioning stays aligned with the input, no shuffle."""
-    if decode_stub == "pil":
-        try:
-            from PIL import Image  # noqa: F401
-        except ImportError as exc:  # pragma: no cover - env-dependent
-            raise ImportError(
-                "decode_stub='pil' needs Pillow installed on driver and "
-                "executors; use decode_stub='fake' for codec-free "
-                "environments"
-            ) from exc
-
-    def _resize_one(payload: bytes) -> bytes:
-        if decode_stub == "raise":
-            raise NotImplementedError(
-                "real image codec not available in this environment; "
-                "plug PIL/cv2 here"
-            )
-        if decode_stub == "pil":
-            import io
-
-            from PIL import Image
-
-            with Image.open(io.BytesIO(payload)) as im:
-                out = io.BytesIO()
-                im.resize((width, height)).save(out, format="PNG")
-                return out.getvalue()
-        digest = hashlib.md5(payload).digest()
-        n = width * height
-        return (digest * (n // len(digest) + 1))[:n]
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "width": pd.Series([width] * len(pdf), dtype="int64"),
-                    "height": pd.Series([height] * len(pdf), dtype="int64"),
-                    "resized_bytes": [
-                        _resize_one(p) for p in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(resize, RESIZED_SCHEMA)
-
-
-def image_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    *,
-    n_bins: int = 64,
-) -> DataFrame:
-    """Content feature vector per payload: the normalized byte
-    histogram (256 byte values folded into ``n_bins`` bins), L1-scaled
-    to sum 1. NOT a stub — an exact, deterministic computation on the
-    raw bytes (the classic codec-free content signature; feeds the
-    similarity/ANN family as an embedding column). Vectorized numpy
-    over Arrow batches; map-only."""
-    import numpy as np
-
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_bytes", LongType()),
-            StructField("features", ArrayType(DoubleType())),
-        ]
-    )
-    fold = 256 // n_bins
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            sizes = []
-            for payload in pdf[payload_col]:
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                sizes.append(len(arr))
-                hist = np.bincount(arr // fold, minlength=n_bins).astype(
-                    "float64"
-                )
-                total = hist.sum()
-                feats.append((hist / total if total else hist).tolist())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": pd.Series(sizes, dtype="int64"),
-                    "features": feats,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(featurize, schema)
-
 
 AUDIO_META_SCHEMA = StructType(
     [

@@ -42,7 +42,7 @@ flooring `//`, so both engines agree on negative gradients.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: fixed-point scales (see module docstring)
@@ -74,37 +74,15 @@ def quantize_features(df: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
-def _dot_nano(w_row: list[int]):
-    """z_nano column for one class: exact decimal dot of `_xq` with
-    the weight literals, then trunc-div by 1e6. The trunc-div is the
-    ``(a - a % d) / d`` identity — Spark's % follows the dividend's
-    sign, so the subtraction lands exactly on a multiple of d and
-    the final / is exact; floor-based idioms would disagree with the
-    oracle's HUGEINT `//` on negative dots.
-
-    The weights enter as ONE array literal, not dim separate Literal
-    nodes: per-round plans are rebuilt with fresh literals, and with
-    64 lits x classes the Catalyst analysis + codegen of the round
-    dominated tiny-corpus wall time (measured 7.7 s -> 2.8 s warm
-    per round at 10 classes x 64 dims on switching to the single
-    array node). Same exact arithmetic either way."""
-    w_arr = F.lit([int(w) for w in w_row]).cast("array<decimal(18,0)>")
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("_xq"), w_arr, lambda x, w: x.cast("decimal(18,0)") * w
-        ),
-        F.lit(0).cast("decimal(38,0)"),
-        lambda acc, v: acc + v.cast("decimal(38,0)"),
-    )
-    d = F.lit(_MICRO).cast("decimal(38,0)")
-    return ((dot - dot % d) / d).cast("long")
-
-
 def _dot_nano_all(weights: dict[int, list[int]], classes: list[int]):
     """array<long> of z_nano for EVERY class from ONE 2-D weight
-    literal — element i is bit-identical to ``_dot_nano(weights[
-    classes[i]])`` (same zip_with multiply, same decimal(38,0) fold,
-    same trunc-div identity), but the plan carries a single
+    literal. Element i is the exact decimal dot of `_xq` with
+    ``weights[classes[i]]`` (zip_with multiply, decimal(38,0) fold),
+    trunc-divided by 1e6 through the ``(a - a % d) / d`` identity:
+    Spark's % follows the dividend's sign, so the subtraction lands
+    exactly on a multiple of d and the final / is exact, where
+    floor-based idioms would disagree with the oracle's HUGEINT `//`
+    on negative dots. The plan carries a single
     transform-over-matrix tree instead of |classes| independent
     dot trees. Catalyst analysis + codegen of the per-class form
     scaled linearly with the class count and dominated small-corpus

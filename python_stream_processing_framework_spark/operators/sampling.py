@@ -150,20 +150,3 @@ def weighted_sample(
         .orderBy(F.desc(key_col), F.col(id_col))
         .limit(n)
     )
-
-
-def sample_exact_n(df: DataFrame, id_col: str, n: int, *, seed: str = "") -> DataFrame:
-    """Deterministic fixed-size sample: the n rows with smallest id hash.
-
-    Equivalent to a seeded shuffle-then-take, but reproducible and
-    distributed: ORDER BY hash LIMIT n compiles to
-    TakeOrderedAndProject — each partition keeps its local top-n, only
-    n rows per partition reach the driver-side merge. md5 collisions
-    on distinct ids are negligible; ties broken by id for determinism.
-    """
-    return (
-        df.withColumn("_h", _unit_hash(id_col, seed))
-        .orderBy("_h", id_col)
-        .limit(n)
-        .drop("_h")
-    )

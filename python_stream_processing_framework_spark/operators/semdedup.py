@@ -211,28 +211,6 @@ def _pair_frame(
     )
 
 
-def semdedup_pairs(
-    embeddings: DataFrame,
-    assign: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    eps: float = 0.7,
-    max_cluster_size: int | None = None,
-) -> DataFrame:
-    """Within-cluster duplicate pairs (id_a, id_b, cos_sim) at
-    cosine >= eps, given `cluster_assign` output — the eps-graph
-    SemDeDup groups over, exposed for pipelines that want the pair
-    evidence itself (audits, threshold sweeps). See `_pair_frame`
-    for the ``max_cluster_size`` giant-cluster guard."""
-    return _pair_frame(
-        _quantized_sigs(embeddings, assign, id_col, vec_col),
-        id_col,
-        eps,
-        max_cluster_size,
-    )
-
-
 def semdedup(
     embeddings: DataFrame,
     *,

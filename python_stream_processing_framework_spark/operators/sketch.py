@@ -113,16 +113,17 @@ def cm_heavy_hitters(
     depth: int = 4,
     width: int = 4096,
 ) -> DataFrame:
-    """Top-k tokens by count-min estimate: (token, est), est-desc with
-    token tie-break. One corpus scan builds the sketch, a second
-    yields the distinct observed tokens; the estimate join is
-    broadcast and the cut is a TakeOrdered, never a global sort."""
+    """Top-k tokens by count-min estimate: (token, n_exact, est),
+    est-desc with token tie-break. One corpus scan builds the sketch,
+    a second yields the distinct observed tokens with their exact
+    counts, so every row carries the one-sided guarantee
+    est >= n_exact; the estimate join is broadcast and the cut is a
+    TakeOrdered, never a global sort."""
     sketch = cm_build(df, text_col, depth=depth, width=width)
     distinct = (
         df.select(F.explode(tokens_expr(text_col)).alias("token"))
         .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select("token")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     )
     est = cm_estimate(distinct, sketch, "token", depth=depth, width=width)
     return est.orderBy(F.col("est").desc(), F.col("token").asc()).limit(k)

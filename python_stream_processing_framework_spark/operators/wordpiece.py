@@ -305,41 +305,3 @@ def wordpiece_segment_counts(
             .alias("n_pieces"),
         )
     )
-
-
-def wordpiece_encode(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    vocab: DataFrame,
-    *,
-    max_word_len: int = 16,
-) -> DataFrame:
-    """Tokenize the corpus under a TRAINED WordPiece vocabulary (see
-    :func:`wordpiece_segment_counts` on why the vocab is explicit):
-    (id, pieces array<string>) in reading order, ## continuation
-    forms kept. UNK convention: unsegmentable or over-length words
-    pass through verbatim as one piece (lossless, the unigram_encode
-    default; BERT's literal '[UNK]' is a lossy rendering downstream
-    can apply trivially). Same one-join scale shape as
-    :func:`wordpiece_segment_counts`."""
-    seg = greedy_segment(
-        unigram_word_table(df, text_col, max_word_len=max_word_len), vocab
-    ).select("word", F.split(F.col("path"), " ").alias("_ps"))
-    words = df.select(
-        F.col(id_col),
-        F.posexplode(tokens_expr(text_col)).alias("word_pos", "word"),
-    )
-    joined = words.join(seg, "word", "left").select(
-        id_col,
-        "word_pos",
-        F.coalesce(F.col("_ps"), F.array(F.col("word"))).alias("_wp"),
-    )
-    return joined.groupBy(id_col).agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("word_pos", "_wp"))),
-                lambda x: x["_wp"],
-            )
-        ).alias("pieces")
-    )

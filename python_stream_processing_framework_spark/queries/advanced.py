@@ -3,7 +3,7 @@ keep-last dedup, CUBE grouping sets, analytic function family."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_stream_processing_framework_spark.catalog import load
@@ -51,29 +51,6 @@ def asof_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("p_us"),
         F.col("r_event_id").alias("click_id"),
         F.unix_micros(F.col("r_ts")).alias("click_us"),
-    )
-
-
-# value_percentiles was rotated out of the 50-entry registry in
-# round 6 for the pooled_retrieval query: approx_distinct_users'
-# oracle comparison computes the same exact `percentile(value,
-# array(...))` per event_type inside the SAME aggregation (its p_exact
-# CTE) to bound the sketch error, so the exact-percentile surface
-# stays driver-exercised; this slot re-verified a sibling built-in on
-# an already-pinned ObjectHashAggregate shape.
-def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = load(spark, sf_dir, "events")
-    pct = F.percentile(F.col("value"), F.lit([0.25, 0.5, 0.9, 0.99]))
-    return (
-        events.groupBy("event_type")
-        .agg(pct.alias("_p"))
-        .select(
-            "event_type",
-            F.col("_p")[0].alias("p25"),
-            F.col("_p")[1].alias("p50"),
-            F.col("_p")[2].alias("p90"),
-            F.col("_p")[3].alias("p99"),
-        )
     )
 
 

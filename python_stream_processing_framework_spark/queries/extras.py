@@ -4,7 +4,6 @@ histogram bucketing, date rollups, string functions."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from python_stream_processing_framework_spark.catalog import load
 from python_stream_processing_framework_spark.queries.base import query
@@ -62,14 +61,14 @@ def char_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # single-function demonstrations — stack() is the inverse of pivot
 # (events_pivot, itself rotated out in r5 — the CASE-WHEN aggregate
 # both compile to stays pinned by pricing_summary/region_revenue),
-# and the histogram's CASE bucketing shares its scalar surface with
-# value_percentiles' width-bucket logic. The DataFrame shapes remain
+# and the histogram's CASE bucketing is a scalar surface the same
+# CASE-WHEN aggregate covers. The DataFrame shapes remain
 # unit-covered via tests/test_edge_cases.py.
 
 # orders_by_month, part_brand_stats and token_count_estimate were
 # consolidated out of the 50-entry driver-verified registry: the first
 # two are plain groupBys whose scalar-function surface (date parts,
 # length/split/upper, countDistinct) is covered by pricing_summary,
-# rollup_lineitem, lang_id and customer_max_order_sql; token counting
+# rollup_lineitem and lang_id; token counting
 # now rides along in text_quality (operators/text.quality_stats
 # token_estimates=True).

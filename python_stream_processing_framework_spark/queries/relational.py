@@ -200,40 +200,6 @@ def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# forecast_revenue was rotated out of the 50-entry driver registry in
-# round 4 (room for the PQ/packing/decontamination flagships): its
-# surface — filter pushdown + cents-exact scalar aggregation — is
-# fully covered by pricing_summary's oracle, and the pushdown contract
-# stays machine-checked by tests/test_plans.py::
-# test_filter_pushdown_reaches_scan, which calls this function
-# directly.
-_forecast_revenue_oracle = f"""
-    SELECT {_MONEY_SUM.format(x='(l_extendedprice*l_discount)')} AS revenue,
-           count(*) AS n_items
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """  # retained for reference / manual checks (TPC-H Q6 shape)
-
-
-def forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = load(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            money(F.sum(cents(F.col("l_extendedprice") * F.col("l_discount")))).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
 @query(
     "top_orders_per_customer",
     """
@@ -367,26 +333,3 @@ def running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pricing_summary / region_revenue keep oracle-pinned, so the row
 # added plan-shape coverage no other row lacked. The operator surface
 # (DataFrame.pivot) is Spark-native, not engine code.
-
-
-# orders_enriched was rotated out of the 50-entry registry in round 6
-# for the gopher_rules query: its broadcast-dim star-enrichment plan
-# shape stays multiply pinned — region_revenue's oracle drives the
-# same dims chain with 4 broadcasts, and test_orders_enriched_
-# broadcasts keeps asserting THIS function's plan directly (the
-# forecast_revenue precedent: the function remains the plan probe
-# after leaving the registry).
-def orders_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, customer, nation, region = load(
-        spark, sf_dir, "orders", "customer", "nation", "region"
-    )
-    return (
-        orders.filter((F.col("o_orderstatus") == "O") & (F.col("o_totalprice") > 50000))
-        .join(customer, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(nation), F.col("n_nationkey") == F.col("c_nationkey"))
-        .join(
-            F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
-            F.col("r_regionkey") == F.col("n_regionkey"),
-        )
-        .select("o_orderkey", "o_totalprice", "c_name", "n_name", "r_name")
-    )

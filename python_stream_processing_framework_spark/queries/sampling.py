@@ -15,7 +15,6 @@ from python_stream_processing_framework_spark.catalog import load
 from python_stream_processing_framework_spark.operators.sampling import (
     HASH_SPACE,
     hash_split,
-    sample_exact_n,
     split_thresholds,
     stratified_sample,
     weighted_sample,
@@ -121,18 +120,4 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
     return weighted_sample(documents, "doc_id", "n_chars", 100, seed="w11").select(
         "doc_id", "lang", "n_chars", "es_key_micro"
-    )
-
-
-# sample_fixed_n was rotated out of the 50-entry registry in round 6
-# for the doc_chunks query: both of its verified surfaces remain
-# driver-pinned elsewhere — the md5-derived deterministic hash
-# ordering by stratified_sample_docs/split_summary (same _duck_hash
-# family) and the TakeOrderedAndProject top-n plan by
-# bm25_topk/cosine_topk/shipping_priority (plan-pinned in
-# tests/test_plans.py). The operator sample_exact_n stays unit-tested.
-def sample_fixed_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = load(spark, sf_dir, "documents")
-    return sample_exact_n(documents, "doc_id", 50, seed="s1").select(
-        "doc_id", "lang", "n_chars"
     )

@@ -10,14 +10,9 @@ guarantee (est >= n_exact always) in the compared values themselves.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from python_stream_processing_framework_spark.catalog import load
-from python_stream_processing_framework_spark.operators.dedup import tokens_expr
-from python_stream_processing_framework_spark.operators.sketch import (
-    cm_build,
-    cm_estimate,
-)
+from python_stream_processing_framework_spark.operators.sketch import cm_heavy_hitters
 from python_stream_processing_framework_spark.queries.base import query
 
 _D = 4
@@ -64,11 +59,4 @@ _ORACLE = f"""
 )
 def cm_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = load(spark, sf_dir, "documents")
-    sketch = cm_build(documents, "text", depth=_D, width=_W)
-    cands = (
-        documents.select(F.explode(tokens_expr("text")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-    )
-    est = cm_estimate(cands, sketch, "token", depth=_D, width=_W)
-    return est.orderBy(F.col("est").desc(), F.col("token").asc()).limit(25)
+    return cm_heavy_hitters(documents, "text", k=25, depth=_D, width=_W)

@@ -13,30 +13,6 @@ from python_stream_processing_framework_spark.catalog import register_views
 from python_stream_processing_framework_spark.queries.base import query
 
 
-# customer_max_order_sql was rotated out of the 50-entry registry in
-# round 6 for the ngram_decontaminate query: Catalyst rewrites its
-# correlated scalar subqueries to the aggregated-left-join shape and
-# the IN subquery to a semi join — both plan shapes stay oracle-pinned
-# by region_revenue (scalar agg + join) and order_priority_semi (left
-# semi), so the slot duplicated already-verified operators. The raw
-# spark.sql surface itself remains driver-exercised by
-# approx_distinct_users below.
-def customer_max_order_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name,
-               (SELECT max(o_totalprice) FROM orders WHERE o_custkey = c_custkey)
-                 AS max_order_price,
-               (SELECT count(*) FROM orders WHERE o_custkey = c_custkey)
-                 AS n_orders
-        FROM customer
-        WHERE c_acctbal > 0
-          AND c_custkey IN (SELECT o_custkey FROM orders)
-        """
-    )
-
-
 @query(
     "approx_distinct_users",
     """

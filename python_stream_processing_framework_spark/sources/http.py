@@ -3,16 +3,13 @@
 `X-Idempotency-Key` header (the sink token), raise on non-2xx so the
 failure feeds the retry/DLQ path.
 
-Driver-side (stdlib urllib) for facade handlers; for bulk delivery at
-scale, run it per-partition inside `foreachBatch` so executors fan out
-the requests (`post_partition`).
+Driver-side (stdlib urllib) for facade handlers.
 """
 
 from __future__ import annotations
 
 import json
 import urllib.request
-from collections.abc import Iterable
 
 from python_stream_processing_framework_spark.streaming.dlq import IdempotentSink
 
@@ -38,27 +35,3 @@ class HttpSink(IdempotentSink):
         with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
             if resp.status >= 300:
                 raise RuntimeError(f"HTTP sink {resp.status} for {token}")
-
-
-def post_partition(url: str, timeout_s: float = 10.0):
-    """Executor-side bulk POST for foreachBatch:
-    `batch.foreachPartition(post_partition(url))` — one connection per
-    partition, events keyed by event_id for receiver-side dedup."""
-
-    def run(rows: Iterable) -> None:
-        for row in rows:
-            event = row.asDict(recursive=True) if hasattr(row, "asDict") else dict(row)
-            req = urllib.request.Request(
-                url,
-                data=json.dumps(event, default=str).encode(),
-                headers={
-                    "Content-Type": "application/json",
-                    "X-Idempotency-Key": str(event.get("event_id")),
-                },
-                method="POST",
-            )
-            with urllib.request.urlopen(req, timeout=timeout_s) as resp:
-                if resp.status >= 300:
-                    raise RuntimeError(f"HTTP sink {resp.status}")
-
-    return run

@@ -23,7 +23,6 @@ suppresses duplicate side effects across retries and restarts.
 from __future__ import annotations
 
 import inspect
-import json
 import logging
 import time
 import uuid

@@ -102,123 +102,11 @@ def test_rebuild_is_deterministic(spark, corpus, tmp_path):
     assert qa == qb and [v for v, _c in qa] == GROUPS[3]
 
 
-def test_ivfpq_index_codes_only_query(spark, corpus, tmp_path):
-    """The IVF-PQ layout serves entirely off codes + codebooks: the
-    probed query returns the true cluster members first (crafted
-    well-separated groups quantize cleanly), the pruned scan carries
-    the cluster_id PartitionFilters pin, and the plan reads the codes
-    parquet — never a float embedding column."""
-    from python_stream_processing_framework_spark.operators.ann_index import (
-        build_ivfpq_index,
-        ivfpq_index_topk,
-    )
-    from python_stream_processing_framework_spark.plans import plan_text
-
-    idx = str(tmp_path / "ivfpq")
-    meta = build_ivfpq_index(corpus, idx, k=3, iters=2, pq_m=4, pq_k=8)
-    assert meta["n_vectors"] == 15 and meta["k_cells"] == 3
-
-    df = ivfpq_index_topk(spark, idx, _vec(0), k=5, n_probe=1)
-    rows = df.collect()
-    # the probed cell's members are exactly the true cluster; WITHIN
-    # it ADC order may differ from exact cosine (PQ quantizes — the
-    # inherent compressed-domain trade), but distances come back
-    # ascending
-    assert set(r["vec_id"] for r in rows) == set(GROUPS[0])
-    dists = [r["adc_dist"] for r in rows]
-    assert dists == sorted(dists)
-
-    t = plan_text(df)
-    assert "PartitionFilters" in t and "cluster_id" in t
-    assert "embedding" not in t  # codes-only: no float column in the plan
-
-
-def _mid(d: float, dim: int = 8) -> list[float]:
-    """A vector between the axis-0 and axis-3 training clusters,
-    jittered by ``d`` toward one of them."""
-    v = [0.0] * dim
-    v[0], v[3] = 0.707 + d, 0.707 - d
-    return v
-
-
 #: Drifted-arrival ids: 363 md5-hashes below every base id, so a k=4
 #: rebuild seeds one centroid INSIDE the drifted cluster (the others
 #: hash above base id 24 and displace nothing) — deterministic
 #: rebuild recovery, same seeding arithmetic as GROUPS above.
 DRIFT_IDS = [363, 100, 101, 102, 103, 104]
-
-
-@pytest.mark.slow
-def test_ivf_index_stats_and_drift_rebuild(spark, corpus, tmp_path):
-    """r12 verdict #2: ivf_index_stats measures what the rebuild
-    guidance needs — batch dirs, cell imbalance vs the build, and
-    append drift (TV between build and append cell distributions).
-    The planted drift scenario: arrivals at the boundary between two
-    trained cells split across them, n_probe=1 recall drops to 0.5,
-    the stats flag it (333_333 ppm > the 300_000 guidance), and a
-    rebuild that gives the drifted mass its own centroid restores
-    recall to 1.0."""
-    from python_stream_processing_framework_spark.operators.ann_index import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_index_stats,
-        ivf_index_topk,
-    )
-
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(corpus, idx, k=3, iters=2)
-    base = ivf_index_stats(spark, idx)
-    assert base["k_cells"] == 3 and base["batch_dirs"] == 1
-    assert base["n_base"] == 15 and base["n_appended"] == 0
-    assert base["empty_cells"] == 0 and base["imbalance_ratio"] == 1.0
-    assert base["append_drift_tv_ppm"] is None
-
-    app = spark.createDataFrame(
-        [
-            (vid, _mid(0.02 if i % 2 == 0 else -0.02))
-            for i, vid in enumerate(DRIFT_IDS)
-        ],
-        "vec_id bigint, embedding array<double>",
-    )
-    append_to_ivf_index(spark, idx, app, "drift1")
-    st = ivf_index_stats(spark, idx)
-    assert st["batch_dirs"] == 2 and st["n_appended"] == 6
-    # half the arrivals in cell(axis0), half in cell(axis3), none in
-    # cell(axis6): TV = 0.5*(|1/3-1/2| + |1/3-1/2| + |1/3-0|) = 1/3
-    assert st["append_drift_tv_ppm"] == 333_333
-    assert st["max_cell"] == 8 and st["imbalance_ratio"] > st["base_imbalance_ratio"]
-
-    # the recall consequence the stats predict: the drifted cluster
-    # straddles two cells, so a 1-cell probe finds only half of it
-    q = _mid(0.0)
-    got = [r["vec_id"] for r in ivf_index_topk(spark, idx, q, k=6, n_probe=1).collect()]
-    assert len(set(got) & set(DRIFT_IDS)) == 3  # recall 0.5
-    # widening the probe is the stopgap...
-    got2 = [r["vec_id"] for r in ivf_index_topk(spark, idx, q, k=6, n_probe=2).collect()]
-    assert set(got2) == set(DRIFT_IDS)
-    # ...and a rebuild is the fix: k=4 seeds a centroid in the
-    # drifted cluster, n_probe=1 recall returns to 1.0
-    idx2 = str(tmp_path / "rebuilt")
-    build_ivf_index(corpus.union(app), idx2, k=4, iters=2)
-    st2 = ivf_index_stats(spark, idx2)
-    assert st2["k_cells"] == 4 and st2["max_cell"] == 6
-    got3 = [r["vec_id"] for r in ivf_index_topk(spark, idx2, q, k=6, n_probe=1).collect()]
-    assert set(got3) == set(DRIFT_IDS)
-
-
-def test_ivf_index_stats_on_codes_only_index(spark, corpus, tmp_path):
-    """Stats work on an IVF-PQ index too (codes/ layout, no float
-    vectors on disk)."""
-    from python_stream_processing_framework_spark.operators.ann_index import (
-        build_ivfpq_index,
-        ivf_index_stats,
-    )
-
-    idx = str(tmp_path / "ivfpq")
-    build_ivfpq_index(corpus, idx, k=3, iters=2, pq_m=4, pq_k=8)
-    st = ivf_index_stats(spark, idx)
-    assert st["k_cells"] == 3 and st["n_base"] == 15
-    assert st["batch_dirs"] == 1 and st["append_drift_tv_ppm"] is None
 
 
 def test_stream_index_embeddings_append_and_query(spark, corpus, tmp_path):
@@ -270,27 +158,3 @@ def test_stream_index_embeddings_append_and_query(spark, corpus, tmp_path):
     ids = [r["vec_id"] for r in got2]
     assert ids == [100, 102] + GROUPS[0]
     assert len(ids) == len(set(ids))  # no duplicate index entries
-
-
-def test_ivf_index_stats_appends_without_base(spark, corpus, tmp_path):
-    """r12 review regression: appended batches over an empty/missing
-    base partition (a build that crashed after centroids/ landed) made
-    append_drift_tv_ppm divide by zero — crashing the health check on
-    exactly the broken index it exists to diagnose. R=0 now reads the
-    token_drift convention: fully drifted, 1e6."""
-    import shutil
-
-    from python_stream_processing_framework_spark.operators.ann_index import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_index_stats,
-    )
-
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(corpus, idx, k=4, iters=1)
-    append_to_ivf_index(spark, idx, corpus.limit(8), batch_tag="a1")
-    # simulate the crash aftermath: base partition gone, appends intact
-    shutil.rmtree(f"{idx}/vectors/batch=base")
-    stats = ivf_index_stats(spark, idx)
-    assert stats["n_base"] == 0 and stats["n_appended"] > 0
-    assert stats["append_drift_tv_ppm"] == 1_000_000

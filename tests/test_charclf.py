@@ -18,10 +18,11 @@ from hypothesis import strategies as st
 from python_stream_processing_framework_spark.operators.charclf import (
     PRIOR_BUCKET,
     UNSEEN_BUCKET,
-    charclf_features,
+    _char_grams_expr,
     charclf_predict,
     charclf_train,
 )
+from tests.conftest import jobs_in
 
 # ------------------------------------------------------ sequential ref
 
@@ -187,8 +188,14 @@ def test_null_label_refused(spark):
         "doc_id bigint, text string, lang string",
     )
     before = _n_persistent(spark)
-    with pytest.raises(ValueError, match="NULL labels"):
-        charclf_train(df, "doc_id", "text", "lang")
+
+    def train():
+        with pytest.raises(ValueError, match="NULL labels"):
+            charclf_train(df, "doc_id", "text", "lang")
+
+    # the refusal is the doc-count aggregate alone: the corpus explode
+    # and its materialize never run
+    assert jobs_in(spark, train) == 4
     assert _n_persistent(spark) == before  # refusal leaves no cache behind
 
 
@@ -205,9 +212,9 @@ def test_short_tokens_emit_no_grams(spark):
     token is shorter than n); a doc of only such tokens is a
     zero-gram doc."""
     df = spark.createDataFrame([(0, "ab a b")], "doc_id bigint, text string")
-    rows = charclf_features(df, "doc_id", "text", n=5, n_buckets=64).collect()
+    rows = df.select(_char_grams_expr("text", 5).alias("g")).collect()
     # only 'ab' pads to '<ab>' (4 chars) < 5 -> nothing at all
-    assert rows == []
+    assert rows[0]["g"] == []
 
 
 # --------------------------------------------- the capability fixture

@@ -8,8 +8,8 @@ from datetime import datetime
 import pytest
 
 from python_stream_processing_framework_spark.operators.funnel import (
+    _funnel_levels,
     funnel_stats,
-    funnel_users,
 )
 
 
@@ -41,9 +41,9 @@ def events(spark):
 def test_funnel_users_strict_order_and_earliest(events):
     out = {
         r["user_id"]: r
-        for r in funnel_users(
-            events, "user_id", "ts", "event_type", ["view", "click", "buy"]
-        ).collect()
+        for r in _funnel_levels(
+            events, "user_id", "ts", "event_type", ["view", "click", "buy"], None
+        )[-1].collect()
     }
     assert set(out) == {1, 4}
     assert (out[1]["t2_ms"] - out[1]["t1_ms"]) == 4000
@@ -83,7 +83,7 @@ def test_horizon_cuts_slow_hops(events):
 
 def test_empty_steps_guard(events):
     with pytest.raises(ValueError, match="at least one"):
-        funnel_users(events, "user_id", "ts", "event_type", [])
+        _funnel_levels(events, "user_id", "ts", "event_type", [], None)
     with pytest.raises(ValueError, match="at least one"):
         funnel_stats(events, "user_id", "ts", "event_type", [])
 

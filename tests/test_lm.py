@@ -1,5 +1,5 @@
 """Bigram-LM perplexity scoring (operators/lm.py): hand-computed
-smoothed probabilities, empty-doc handling, and the CCNet keep-rule.
+smoothed probabilities, empty-doc handling and the uniform fallback.
 """
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ import math
 import pytest
 
 from python_stream_processing_framework_spark.operators.lm import (
-    lm_filter,
     score_bigram_lm,
     train_bigram_lm,
 )
@@ -61,25 +60,6 @@ def test_score_matches_hand_computation(spark, lm_model):
     assert out[12] == (2, _avg_lp(unseen_w, unseen_ctx))
     # empty doc keeps its row: zero tokens, NULL score
     assert out[13] == (0, None)
-
-
-def test_lm_filter_keep_rule(spark, lm_model):
-    _, bigrams, contexts, v = lm_model
-    docs = spark.createDataFrame(
-        [(10, "a b"), (11, "c"), (13, "")], "doc_id int, text string"
-    )
-    scored = score_bigram_lm(
-        docs, bigrams, contexts, v, "doc_id", "text", add_k=0.5
-    )
-    # threshold between the in-distribution doc and the junk doc
-    thr = (math.log(2.5 / 3.5) + math.log(0.5 / 3.5)) / 2
-    kept = sorted(
-        r["doc_id"]
-        for r in lm_filter(docs, scored, "doc_id", min_avg_lp=thr).collect()
-    )
-    # the fluent doc survives; the OOV doc and the NULL-scored empty
-    # doc are both dropped
-    assert kept == [10]
 
 
 def test_unseen_context_hits_uniform_floor(spark, lm_model):

@@ -18,9 +18,6 @@ from python_stream_processing_framework_spark.operators.joins import as_of_join
 from python_stream_processing_framework_spark.operators.multimodal import (
     binarize,
     decode_images,
-    image_features,
-    resize_images,
-    sample_frames,
 )
 from python_stream_processing_framework_spark.operators.routing import Router
 from python_stream_processing_framework_spark.operators.windows import split_late
@@ -116,15 +113,6 @@ def test_multimodal_decode_roundtrip(spark):
     again = {r["doc_id"]: r.asDict() for r in decode_images(payloads).collect()}
     assert again == meta
 
-    frames = sample_frames(payloads, frame_size=1000, stride=2).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # doc2: 2500 bytes -> chunks [1000,1000,500] -> stride 2 keeps idx 0,2
-    assert len(by_doc[2]) == 2
-    assert sorted(len(r["frame_bytes"]) for r in by_doc[2]) == [500, 1000]
-    assert len(by_doc[1]) == 1
-
 
 def test_decode_stub_raise_mode(spark):
     docs = spark.createDataFrame([(1, "hi")], ["doc_id", "text"])
@@ -166,58 +154,6 @@ def test_decode_stub_pil_real_png(spark):
     meta = decode_images(payloads, decode_stub="pil").collect()[0]
     assert (meta["width"], meta["height"], meta["channels"]) == (1, 1, 3)
     assert meta["n_bytes"] == len(_PNG_1PX)
-
-
-def test_resize_images_fake_and_modes(spark):
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, "y" * 300)], ["doc_id", "text"]
-    )
-    payloads = binarize(docs, "doc_id", "text")
-    out = {r["doc_id"]: r for r in
-           resize_images(payloads, width=8, height=4).collect()}
-    import hashlib as _hl
-    for i, text in [(1, "hello world"), (2, "y" * 300)]:
-        assert (out[i]["width"], out[i]["height"]) == (8, 4)
-        assert len(out[i]["resized_bytes"]) == 32
-        digest = _hl.md5(text.encode()).digest()
-        assert bytes(out[i]["resized_bytes"]) == (digest * 3)[:32]
-    with pytest.raises(Exception, match="NotImplementedError|real image codec"):
-        resize_images(payloads, decode_stub="raise").collect()
-
-
-def test_resize_images_pil_real_png(spark):
-    pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    payloads = spark.createDataFrame(
-        [(1, bytearray(_PNG_1PX))], "doc_id bigint, payload binary"
-    )
-    (row,) = resize_images(
-        payloads, width=3, height=2, decode_stub="pil"
-    ).collect()
-    with Image.open(io.BytesIO(bytes(row["resized_bytes"]))) as im:
-        assert (im.width, im.height) == (3, 2)
-
-
-def test_image_features_exact_histogram(spark):
-    import numpy as np
-
-    payloads = spark.createDataFrame(
-        [(1, bytearray(b"\x00\x00\x04\xff")), (2, bytearray(b""))],
-        "doc_id bigint, payload binary",
-    )
-    out = {r["doc_id"]: r for r in
-           image_features(payloads, n_bins=64).collect()}
-    f1 = out[1]["features"]
-    assert len(f1) == 64 and out[1]["n_bytes"] == 4
-    # bytes 0,0,4 fold to bin 0 (256/64 = 4 wide: 0..3 -> bin 0,
-    # 4 -> bin 1) and 255 -> bin 63
-    assert f1[0] == 0.5 and f1[1] == 0.25 and f1[63] == 0.25
-    assert abs(sum(f1) - 1.0) < 1e-12
-    # empty payload: zero vector, not NaN
-    assert out[2]["n_bytes"] == 0 and sum(out[2]["features"]) == 0.0
 
 
 def test_portable_hash_helpers(spark):
@@ -454,20 +390,6 @@ def test_stratified_sample_nested(spark):
     }
     assert small < big
     assert 70 <= len(small) <= 130 and 250 <= len(big) <= 350
-
-
-def test_sample_exact_n_plan_and_determinism(spark):
-    from python_stream_processing_framework_spark.operators.sampling import (
-        sample_exact_n,
-    )
-
-    df = spark.range(0, 5000).withColumnRenamed("id", "doc_id").repartition(8)
-    s1 = sample_exact_n(df, "doc_id", 25).collect()
-    s2 = sample_exact_n(df, "doc_id", 25).collect()
-    assert [r["doc_id"] for r in s1] == [r["doc_id"] for r in s2]
-    assert len(s1) == 25
-    plan = sample_exact_n(df, "doc_id", 25)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan  # no global sort
 
 
 def test_weighted_sample_matches_brute_force_reference(spark):

@@ -25,18 +25,16 @@ def q(name, spark):
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    # forecast_revenue left the driver registry in r4 but remains the
-    # canonical pushdown probe (TPC-H Q6 shape, 4 pushable predicates)
-    from python_stream_processing_framework_spark.queries.relational import (
-        forecast_revenue,
-    )
-
-    df = forecast_revenue(spark, SF_SMOKE)
     assert_pushed_filters(
-        df,
+        q("pricing_summary", spark),
         "IsNotNull(l_shipdate)",
-        "GreaterThanOrEqual(l_shipdate",
-        "LessThan(l_quantity,24.0)",
+        "LessThanOrEqual(l_shipdate",
+    )
+    assert_pushed_filters(
+        q("region_revenue", spark),
+        "IsNotNull(o_orderdate)",
+        "GreaterThanOrEqual(o_orderdate",
+        "LessThan(o_orderdate",
     )
 
 
@@ -80,19 +78,7 @@ def test_star_join_broadcasts_dims_fact_stays_streamed(spark):
                 break  # left the BroadcastExchange subtree
             assert "lineitem.parquet" not in sub, "fact table broadcast"
     assert count_exchanges(df) <= 3
-
-
-def test_orders_enriched_broadcasts(spark):
-    # left the driver registry in r6 (rationale at the definition)
-    # but remains the broadcast-enrichment plan probe
-    from python_stream_processing_framework_spark.queries.relational import (
-        orders_enriched,
-    )
-
-    df = orders_enriched(spark, SF_SMOKE)
-    assert_broadcast_join(df, min_count=2)
-    assert_no_cartesian(df)
-    assert_pushed_filters(df, "EqualTo(o_orderstatus,O)")
+    assert_pushed_filters(df, "EqualTo(r_name,ASIA)")
 
 
 def test_windowed_agg_single_exchange(spark):
@@ -682,16 +668,18 @@ def test_semdedup_cluster_bucketed_pairs(spark):
     cols = read_schema_columns(df, "embeddings.parquet")
     assert set(cols) == {"vec_id", "embedding"}
 
-    # the pair half, via the public pair builder
+    # the pair half, via the pair builder semdedup runs
     from python_stream_processing_framework_spark.catalog import load
     from python_stream_processing_framework_spark.operators.semdedup import (
+        _pair_frame,
+        _quantized_sigs,
         cluster_assign,
-        semdedup_pairs,
     )
 
     (emb,) = load(spark, SF_SMOKE, "embeddings")
     assign, _ = cluster_assign(emb, k=4, iters=1)
-    ptext = plan_text(semdedup_pairs(emb, assign, eps=0.5))
+    sigs = _quantized_sigs(emb, assign, "vec_id", "embedding")
+    ptext = plan_text(_pair_frame(sigs, "vec_id", 0.5))
     assert "FlatMapGroupsInPandas" in ptext
     assert "CartesianProduct" not in ptext
     release_caches()
@@ -962,7 +950,7 @@ def test_probe_gradient_round_is_one_narrow_exchange(spark):
     map-side partials) — residuals are literal expressions, the model
     never rides a row, no join anywhere in the round."""
     from python_stream_processing_framework_spark.operators.probe import (
-        _dot_nano,
+        _dot_nano_all,
         quantize_features,
     )
 
@@ -970,11 +958,11 @@ def test_probe_gradient_round_is_one_narrow_exchange(spark):
     q_ = quantize_features(df, "embedding").select(
         F.col("label").cast("long").alias("_y"), "_xq"
     )
-    w = [1] * 64
+    w = {0: [1] * 64}
     resid = q_.select(
         "_xq",
         (
-            _dot_nano(w)
+            _dot_nano_all(w, [0])[0]
             - F.when(F.col("_y") == 0, F.lit(10**9)).otherwise(F.lit(0))
             .cast("long")
         ).alias("_r0"),

@@ -119,8 +119,13 @@ def test_max_cluster_size_caps_pairing_deterministically(spark):
     keeps its output row; uncapped finds it; the capped result is
     identical across input partitionings."""
     from python_stream_processing_framework_spark.operators.semdedup import (
-        semdedup_pairs,
+        _pair_frame,
+        _quantized_sigs,
     )
+
+    def pairs(emb, assign, eps, max_cluster_size=None):
+        sigs = _quantized_sigs(emb, assign, "vec_id", "embedding")
+        return _pair_frame(sigs, "vec_id", eps, max_cluster_size)
 
     # one cluster's worth of near-orthogonal vectors, with ids 90/91
     # an exact duplicate pair sitting past the cap boundary
@@ -132,16 +137,16 @@ def test_max_cluster_size_caps_pairing_deterministically(spark):
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     assign = emb.select("vec_id", (emb.vec_id * 0).cast("int").alias("cluster"))
 
-    uncapped = semdedup_pairs(emb, assign, eps=0.999)
+    uncapped = pairs(emb, assign, eps=0.999)
     assert [(r["id_a"], r["id_b"]) for r in uncapped.collect()] == [(90, 91)]
 
-    capped = semdedup_pairs(emb, assign, eps=0.999, max_cluster_size=6)
+    capped = pairs(emb, assign, eps=0.999, max_cluster_size=6)
     assert capped.count() == 0
 
     # cap high enough to include one dup member but not both: still
     # no pair (91 is outside), and repartitioning cannot change that
-    capped7 = semdedup_pairs(emb, assign, eps=0.999, max_cluster_size=7)
-    capped7_rep = semdedup_pairs(
+    capped7 = pairs(emb, assign, eps=0.999, max_cluster_size=7)
+    capped7_rep = pairs(
         emb.repartition(5), assign, eps=0.999, max_cluster_size=7
     )
     assert capped7.count() == 0 and capped7_rep.count() == 0

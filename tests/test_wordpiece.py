@@ -1,6 +1,6 @@
 """WordPiece (operators/wordpiece.py): hypothesis parity of the
 distributed trainer against a sequential reference, the canonical
-likelihood-vs-count ranking example, greedy longest-match encode
+likelihood-vs-count ranking example, greedy longest-match segment
 semantics, UNK conventions, and determinism."""
 
 from __future__ import annotations
@@ -8,9 +8,11 @@ from __future__ import annotations
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
+from python_stream_processing_framework_spark.operators.unigram import (
+    unigram_word_table,
+)
 from python_stream_processing_framework_spark.operators.wordpiece import (
     greedy_segment,
-    wordpiece_encode,
     wordpiece_segment_counts,
     wordpiece_train,
     wordpiece_vocab,
@@ -162,14 +164,16 @@ def test_wordpiece_encode_greedy_longest_match(spark):
     )
     m = wordpiece_train(docs, "text", n_merges=5)
     v = wordpiece_vocab(docs, "text", m)
-    out = {
-        r["doc_id"]: r["pieces"]
-        for r in wordpiece_encode(docs, "doc_id", "text", v).collect()
+    paths = {
+        r["word"]: r["path"]
+        for r in greedy_segment(unigram_word_table(docs, "text"), v).collect()
     }
-    assert out[1] == [
-        "hu", "##g", "##g", "##in", "##g",
-        "hu", "##g", "##s", "the", "hu", "##g",
-    ]
+    assert {w: paths[w] for w in ("hugging", "hugs", "the", "hug")} == {
+        "hugging": "hu ##g ##g ##in ##g",
+        "hugs": "hu ##g ##s",
+        "the": "the",
+        "hug": "hu ##g",
+    }
     counts = {
         r["doc_id"]: (r["n_words"], r["n_pieces"])
         for r in wordpiece_segment_counts(docs, "doc_id", "text", v).collect()
@@ -180,9 +184,8 @@ def test_wordpiece_encode_greedy_longest_match(spark):
 
 def test_wordpiece_unk_conventions(spark):
     """A word with a character the vocabulary never saw dies at that
-    cursor: greedy_segment yields no row; encode passes the word
-    through verbatim; segment_counts prices it 1. Over-length words
-    (>16 chars) are UNK the same way."""
+    cursor: greedy_segment yields no row and segment_counts prices it
+    1. Over-length words (>16 chars) are UNK the same way."""
     train = spark.createDataFrame(
         [(1, "abc abc ab")], "doc_id bigint, text string"
     )
@@ -191,13 +194,17 @@ def test_wordpiece_unk_conventions(spark):
     probe = spark.createDataFrame(
         [(9, "abc xyz " + "a" * 17)], "doc_id bigint, text string"
     )
-    enc = wordpiece_encode(probe, "doc_id", "text", v).head()
-    assert enc["pieces"][-2:] == ["xyz", "a" * 17]
+    paths = {
+        r["word"]: r["path"]
+        for r in greedy_segment(unigram_word_table(probe, "text"), v).collect()
+    }
+    # 'abc' dies too: greedy takes the longest match 'ab', and '##c'
+    # is not in the vocabulary (no backtracking to 'a' + '##bc')
+    assert paths == {}
     (c,) = wordpiece_segment_counts(probe, "doc_id", "text", v).collect()
     assert c["n_words"] == 3
-    # UNK words emit exactly one (verbatim) piece in encode too, so
-    # the priced count equals the emitted stream length
-    assert c["n_pieces"] == len(enc["pieces"])
+    # each UNK word prices exactly one piece
+    assert c["n_pieces"] == 3
 
 
 def test_wordpiece_train_partition_invariant(spark):
